@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Per-query wall-clock benchmark. One untimed warmup pass first (pays JIT +
   * whole-stage-codegen compilation + filesystem cache; residual JIT
@@ -156,7 +157,10 @@ object Bench {
     // stop the session BEFORE printing: no Spark shutdown log line can
     // land after (and displace) the JSON lines in the driver's tail
     val wallAtStop = elapsed()
-    spark.stop()
+    // a failing stop must not cost the run its results: report it on
+    // stderr and still print both lines
+    try spark.stop() catch { case NonFatal(e) =>
+      System.err.println(s"[bench] spark.stop() failed: $e") }
     println(fullLine)
     // compact final line — MUST stay well under the driver's 2000-char tail
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$meta,"n_queries":${results.size},"wall_sec":${fmt(wallAtStop)},"queries_file":"$out","spread_file":"${out.stripSuffix(".json")}_spread.json","slowest10":$top}""")

@@ -12604,7 +12604,7 @@ object SparkEntry {
 
   /** Unrolled fixed-round PageRank oracle — one (base, ranks) CTE pair per
     * power-iteration round, arithmetic ordered exactly as
-    * [[graft.ops.Graph.pageRankStep]] evaluates it ((1-d)/n + d·dang/n,
+    * the [[graft.ops.Graph.pageRankFixed]] round evaluates it ((1-d)/n + d·dang/n,
     * then + d·inflow, doubles throughout) so both engines walk the same
     * float path and the ppm rounding compares clean.
     */

@@ -58,14 +58,12 @@ object Graph {
     val raw = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
     val verts = raw.select(col("u").as("id"))
       .union(raw.select(col("v").as("id"))).distinct().localCheckpoint()
-    var e = raw.where(col("u") =!= col("v"))
+    val e0 = raw.where(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       .distinct().localCheckpoint()
 
-    var iter = 0
-    var converged = e.isEmpty
-    while (!converged && iter < maxIters) {
+    val stars = if (e0.isEmpty) e0 else Rounds.untilConverged(maxIters, e0) { e =>
       // large-star over the symmetrized adjacency
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
       val mLarge = sym.groupBy("u").agg(min("v").as("mn"))
@@ -76,25 +74,22 @@ object Graph {
       // small-star on the big→small directed output (u > v holds by
       // construction: large emits (v, m) with v > u ≥ m)
       val mSmall = large.groupBy("u").agg(min("v").as("m"))
-      val next = large.join(mSmall, "u")
+      large.join(mSmall, "u")
         .select(explode(array(
           struct(col("v").as("a"), col("m").as("b")),
           struct(col("u").as("a"), col("m").as("b")))).as("p"))
         .select(col("p.a").as("u"), col("p.b").as("v"))
         .where(col("u") =!= col("v"))
-        .distinct().localCheckpoint()
+        .distinct()
+    } { (prev, next) =>
       // exact set-equality check: both sides are distinct, so any (u,v)
       // appearing once in the concatenation is in exactly one of the two
-      converged = next.union(e).groupBy("u", "v").count()
+      next.union(prev).groupBy("u", "v").count()
         .where(col("count") === 1).limit(1).isEmpty
-      e = next
-      iter += 1
-    }
-    require(converged,
-      s"connectedComponents did not converge within $maxIters rounds — " +
-        "star contraction needs O(log n) rounds; raise maxIters")
+    }.getOrElse(Rounds.notConverged("connectedComponents", maxIters,
+      "star contraction needs O(log n) rounds; raise maxIters"))
     verts
-      .join(e.select(col("u").as("id"), col("v").as("comp")), Seq("id"), "left")
+      .join(stars.select(col("u").as("id"), col("v").as("comp")), Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
   }
 
@@ -116,19 +111,16 @@ object Graph {
     *              each row needs to appear in one direction only.
     * @return (id, comp) — comp is the min vertex id of the component.
     */
-  def minLabelComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
-    val (labels, converged, _) = minLabelCore(edges, maxIters)
+  def minLabelComponents(edges: DataFrame, maxIters: Int = 50): DataFrame =
     // A silent non-converged return would hand callers WRONG (split)
     // components; duplicate-cluster graphs converge in a handful of rounds,
     // so hitting the cap means the edge input isn't the near-clique shape
     // this propagation is designed for — fail loudly (callers wanting
     // topology-independence should be on connectedComponents instead).
-    require(converged,
-      s"minLabelComponents did not converge within $maxIters rounds — " +
-        "labels were still changing; raise maxIters or use " +
-        "connectedComponents (star contraction) for long-path graphs")
-    labels
-  }
+    minLabelCore(edges, maxIters).getOrElse(Rounds.notConverged(
+      "minLabelComponents", maxIters, "labels were still changing; raise " +
+        "maxIters or use connectedComponents (star contraction) for " +
+        "long-path graphs"))
 
   /** Auto-selecting components — the dispatch the two algorithms above
     * document: min-label propagation does less work per round (one join,
@@ -153,12 +145,11 @@ object Graph {
     // the same total work as before: one upstream evaluation, now into the
     // pinned frame instead of straight into the adjacency build.
     val pinned = edges.localCheckpoint()
-    val (labels, converged, _) = minLabelCore(pinned, trialRounds)
-    if (converged) labels else connectedComponents(pinned, maxIters)
+    minLabelCore(pinned, trialRounds)
+      .getOrElse(connectedComponents(pinned, maxIters))
   }
 
-  private def minLabelCore(edges: DataFrame,
-                           maxIters: Int): (DataFrame, Boolean, Int) = {
+  private def minLabelCore(edges: DataFrame, maxIters: Int): Option[DataFrame] = {
     val Array(srcCol, dstCol) = edges.columns
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
     // materialize the adjacency ONCE — without this every propagation round
@@ -166,31 +157,39 @@ object Graph {
     // input that's the full shingle->minhash->band DAG per round)
     val adj = e.union(e.select(col("v"), col("u"))).distinct().localCheckpoint()
 
-    var labels = adj.select(col("u").as("id")).distinct()
+    val labels = adj.select(col("u").as("id")).distinct()
       .withColumn("comp", col("id"))
       .localCheckpoint()
-    var prevSum = labels.agg(sum(col("comp").cast("decimal(38,0)")))
-      .head().getDecimal(0)
-
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
+    Rounds.untilConverged(maxIters, labels) { labels =>
       val nbrMin = adj
         .join(labels.withColumnRenamed("id", "v"), "v")
         .groupBy(col("u").as("id"))
         .agg(min("comp").as("nbr_comp"))
-      val next = labels
+      labels
         .join(nbrMin, Seq("id"), "left")
         .select(col("id"),
           least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-        .localCheckpoint()
-      val s = next.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels = next
-      iter += 1
+    }(sumUnchanged(labels, "comp"))
+  }
+
+  /** Convergence test for monotone integer state: the values only ever
+    * decrease, so sum(value) is strictly decreasing until the fixpoint and
+    * one scalar aggregate per round detects it (decimal(38,0): no overflow
+    * at any id scale). The previous round's sum is remembered, not
+    * recomputed, so each round costs one aggregate job.
+    */
+  private def sumUnchanged(init: DataFrame,
+                           c: String): (DataFrame, DataFrame) => Boolean = {
+    def total(df: DataFrame) =
+      Option(df.agg(sum(col(c).cast("decimal(38,0)"))).head().getDecimal(0))
+        .map(BigDecimal(_))
+    var last = total(init)
+    (_, next) => {
+      val s = total(next)
+      val same = s == last
+      last = s
+      same
     }
-    (labels, converged, iter)
   }
 
   /** Distributed PageRank by power iteration — importance scoring over a
@@ -201,11 +200,11 @@ object Graph {
     * every edge carries rank/out_degree to its destination, and a groupBy
     * on the destination sums the inflow. Dangling vertices (no out-edges)
     * can't be dropped — their mass leaks and ranks stop summing to 1 — so
-    * their total rank is collected as ONE scalar per round (same O(1)
-    * driver-traffic idiom as connectedComponents' convergence aggregate)
-    * and redistributed uniformly. Convergence is the L1 delta between
-    * successive rank vectors; each round localCheckpoints to keep the plan
-    * O(1) deep. The edge list and out-degrees are materialized once.
+    * their total rank is redistributed through the teleport. Convergence
+    * is the L1 delta between successive rank vectors (one scalar action
+    * per round, the connectedComponents idiom); non-convergence fails
+    * loudly. Setup and round are [[pageRankSetup]]'s, shared with the
+    * fixed-round and personalized variants.
     *
     * @param edges two BIGINT columns (src, dst), DIRECTED; parallel
     *              duplicate edges are collapsed.
@@ -215,38 +214,14 @@ object Graph {
                maxIters: Int = 120): DataFrame = {
     // error contracts by ~damping per round, so the defaults (0.85, 1e-6)
     // need ~log(tol)/log(damping) ≈ 85 rounds — size maxIters accordingly
-    // when tightening tol; non-convergence fails loudly below
-    val Array(srcCol, dstCol) = edges.columns
-    // the static sides are hash-partitioned ON THE PER-ROUND JOIN KEY
-    // before their one-time materialization: localCheckpoint preserves
-    // outputPartitioning, so none of the maxIters rank⋈deg⋈edge joins
-    // re-exchanges the edge list or the degree table — only the inflow
-    // groupBy (mass moving along edges) shuffles each round
-    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .distinct().repartition(col("u")).localCheckpoint()
-    val verts = e.select(col("u").as("id"))
-      .union(e.select(col("v").as("id"))).distinct().localCheckpoint()
-    val n = verts.count()
-    val outDeg = e.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-    // (id, deg) for every vertex; deg NULL ⇔ dangling
-    val degs = verts.join(outDeg, Seq("id"), "left")
-      .repartition(col("id")).localCheckpoint()
-
-    var ranks = verts.withColumn("rank", lit(1.0 / n))
-      .repartition(col("id")).localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val next = pageRankStep(ranks, e, degs, n, damping)
-      val delta = next.agg(sum(abs(col("rank") - col("prev")))).head().getDouble(0)
-      converged = delta < tol
-      ranks = next.drop("prev")
-      iter += 1
-    }
-    require(converged,
-      s"pageRank did not converge within $maxIters rounds (L1 delta ≥ $tol); " +
-        "raise maxIters or loosen tol")
-    ranks
+    // when tightening tol
+    val (init, round) = pageRankSetup(edges, None, damping)
+    Rounds.untilConverged(maxIters, init)(round) { (prev, next) =>
+      next.join(prev.select(col("id"), col("rank").as("prev")), "id")
+        .agg(sum(abs(col("rank") - col("prev")))).head().getDouble(0) < tol
+    }.getOrElse(Rounds.notConverged("pageRank", maxIters,
+        s"L1 delta ≥ $tol; raise maxIters or loosen tol"))
+      .select(col("id"), col("rank"))
   }
 
   /** Fixed-round PageRank — same power iteration as [[pageRank]] but an
@@ -257,109 +232,106 @@ object Graph {
     * which a "loop until |Δ| < tol" contract never is.
     */
   def pageRankFixed(edges: DataFrame, damping: Double, iters: Int): DataFrame = {
-    val Array(srcCol, dstCol) = edges.columns
-    // same key-aligned one-time materialization as [[pageRank]]: the
-    // static sides never re-exchange across the fixed rounds.
-    // (Measured dead end, guide §1: pinning EXPLICIT input-derived widths
-    // on e/degs/inflow — repartition(width, key) everywhere — read 1.2×
-    // WORSE on the q142/q160/q166 trio than letting AQE pick per-exchange
-    // counts; the extra setup materializations and pinned exchanges cost
-    // more than the per-round re-exchanges they remove at this scale.)
-    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .distinct().repartition(col("u")).localCheckpoint()
-    val verts = e.select(col("u").as("id"))
-      .union(e.select(col("v").as("id"))).distinct()
-    val outDeg = e.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-    val degs = verts.join(outDeg, Seq("id"), "left")
-      .repartition(col("id")).localCheckpoint()
-    val n = degs.count()
-    // the rank state CARRIES deg (guide §2.4: one fewer per-round join and
-    // two fewer setup materializations — verts and the initial rank table
-    // are views of the one degs checkpoint); arithmetic is unchanged
-    var ranks = degs.select(col("id"), col("deg"), lit(1.0 / n).as("rank"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      // The dangling total is an aggregate of the PREVIOUS round's state,
-      // which is a materialized checkpoint — so it is read straight off
-      // those blocks (one tiny job) instead of riding a NULL-sentinel
-      // union through the inflow exchange (the r12 shape, whose broadcast
-      // side re-planned the whole join+union+groupBy subtree every
-      // round: ~12 jobs/round profiled). Same row set, same partitioning,
-      // same two-level double sum — the ppm-margin argument in
-      // [[pageRankStep]]'s doc covers the partial-order change, and the
-      // oracle re-gates it at all three SFs.
-      val dangling = ranks.where(col("deg").isNull)
-        .agg(coalesce(sum("rank"), lit(0.0)).as("dang"))
-      val inflow = ranks.where(col("deg").isNotNull)
-        .join(e.withColumnRenamed("u", "id"), "id")
-        .select(col("v").as("id"), (col("rank") / col("deg")).as("w"))
-        .groupBy("id").agg(sum("w").as("inflow"))
-      ranks = degs.join(inflow, Seq("id"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("id"), col("deg"),
-          (lit((1.0 - damping) / n) + lit(damping) * col("dang") / lit(n)
-            + lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"))
-        .localCheckpoint()
-    }
-    ranks.select(col("id"), col("rank"))
+    val (init, round) = pageRankSetup(edges, None, damping)
+    Rounds.fixed(iters, init)((ranks, _) => round(ranks))
+      .select(col("id"), col("rank"))
   }
 
   /** Fixed-round PERSONALIZED PageRank (random walk with restart): the
     * teleport — both the (1−d) restart and the dangling mass — returns to
     * the SEED set only, so rank measures proximity to the seeds instead
-    * of global importance. Same execution skeleton as [[pageRankFixed]]
-    * (static sides key-partitioned and materialized once, one inflow
-    * shuffle per round, dangling total as a broadcast one-row aggregate,
-    * no driver action in the loop) with one extra broadcast-size
-    * left-semi flag join to mark seeds. Arithmetic contract for the
-    * oracle: rank = (seed ? (1−d)/|S| + d·dang/|S| : 0) + d·inflow,
-    * doubles throughout, evaluation order fixed — the same noise-margin
-    * argument as [[pageRankStep]] applies.
+    * of global importance. Same rounds as [[pageRankFixed]] with one
+    * extra setup-time flag join to mark seeds.
     *
     * @param seeds one BIGINT column of seed vertex ids (must exist in the
     *              graph; duplicates ignored).
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            damping: Double, iters: Int): DataFrame = {
+    val (init, round) = pageRankSetup(edges, Some(seeds), damping)
+    Rounds.fixed(iters, init)((ranks, _) => round(ranks))
+      .select(col("id"), col("rank"))
+  }
+
+  /** The one PageRank setup and round behind [[pageRank]],
+    * [[pageRankFixed]] and [[personalizedPageRank]]: returns the pinned
+    * initial state and the round body.
+    *
+    * The static sides are hash-partitioned ON THE PER-ROUND JOIN KEY
+    * before their one-time materialization: localCheckpoint preserves
+    * outputPartitioning, so no round re-exchanges the edge list or the
+    * degree table — only the inflow groupBy (mass moving along edges)
+    * shuffles. The rank state CARRIES deg (and the seed flag), so a round
+    * needs no state⋈degs join. (Measured dead end, guide §1: pinning
+    * EXPLICIT input-derived widths on e/degs/inflow — repartition(width,
+    * key) everywhere — read 1.2× WORSE on the q142/q160/q166 trio than
+    * letting AQE pick per-exchange counts.)
+    *
+    * Teleport: without seeds, every vertex gets (1−d)/n + d·dang/n; with
+    * seeds, each seed gets (1−d)/|S| + d·dang/|S| and every other vertex
+    * 0 — the uniform case carries no seed column and makes no seed join.
+    * The dangling total is an aggregate of the PREVIOUS round's pinned
+    * state, read straight off those blocks as a broadcast one-row
+    * aggregate (one tiny job, no driver `.head()`) instead of riding a
+    * NULL-sentinel union through the inflow exchange, whose broadcast side
+    * re-planned the whole join+union+groupBy subtree every round (~12
+    * jobs/round profiled).
+    *
+    * Evaluation order of the update — teleport + d·inflow, with the
+    * teleport's own terms in the order above, doubles throughout — is the
+    * contract the unrolled SQL oracles replicate; don't reassociate it.
+    * Determinism note: the inflow/dangling sums accumulate raw doubles in
+    * partition-dependent order, so they are NOT bit-identical across runs
+    * — unlike the decimal-snapped aggregates elsewhere in the repo. The
+    * oracle still hash-matches by margin, not by construction: per-round
+    * reassociation error is bounded by n·ε·Σ|x| ≈ 1e-12 on unit mass,
+    * damped by 0.85 per round, while q142 reports ppm rounded to 1e-2 —
+    * ten orders of magnitude of slack.
+    */
+  private def pageRankSetup(edges: DataFrame, seeds: Option[DataFrame],
+                            damping: Double): (DataFrame, DataFrame => DataFrame) = {
     val Array(srcCol, dstCol) = edges.columns
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .distinct().repartition(col("u")).localCheckpoint()
-    val sd = seeds.select(col(seeds.columns.head).as("id")).distinct()
-      .localCheckpoint()
-    val nS = sd.count()
-    require(nS > 0, "personalizedPageRank needs a non-empty seed set")
     val verts = e.select(col("u").as("id"))
       .union(e.select(col("v").as("id"))).distinct()
     val outDeg = e.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-    val degs = verts.join(outDeg, Seq("id"), "left")
-      .join(sd.withColumn("seed", lit(true)), Seq("id"), "left")
-      .withColumn("seed", coalesce(col("seed"), lit(false)))
-      .repartition(col("id")).localCheckpoint()
-    // rank state carries (deg, seed) — same fusion as [[pageRankFixed]]:
-    // no per-round state⋈degs join, no separate initial-rank checkpoint
-    var ranks = degs.select(col("id"), col("deg"), col("seed"),
-      when(col("seed"), lit(1.0 / nS)).otherwise(lit(0.0)).as("rank"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      // dangling read straight off the previous round's checkpoint —
-      // see pageRankFixed
+    // (id, deg[, seed]) for every vertex; deg NULL ⇔ dangling
+    val withDeg = verts.join(outDeg, Seq("id"), "left")
+    val (degs, start, teleport) = seeds match {
+      case None =>
+        val degs = withDeg.repartition(col("id")).localCheckpoint()
+        val n = degs.count()
+        (degs, lit(1.0 / n),
+          lit((1.0 - damping) / n) + lit(damping) * col("dang") / lit(n))
+      case Some(s) =>
+        val sd = s.select(col(s.columns.head).as("id")).distinct()
+          .localCheckpoint()
+        val nS = sd.count()
+        require(nS > 0, "personalizedPageRank needs a non-empty seed set")
+        val degs = withDeg
+          .join(sd.withColumn("seed", lit(true)), Seq("id"), "left")
+          .withColumn("seed", coalesce(col("seed"), lit(false)))
+          .repartition(col("id")).localCheckpoint()
+        (degs, when(col("seed"), lit(1.0 / nS)).otherwise(lit(0.0)),
+          when(col("seed"),
+            lit((1.0 - damping) / nS) + lit(damping) * col("dang") / lit(nS))
+            .otherwise(lit(0.0)))
+    }
+    val static = degs.columns.toSeq.map(col)
+    val round = (ranks: DataFrame) => {
       val dangling = ranks.where(col("deg").isNull)
         .agg(coalesce(sum("rank"), lit(0.0)).as("dang"))
       val inflow = ranks.where(col("deg").isNotNull)
         .join(e.withColumnRenamed("u", "id"), "id")
         .select(col("v").as("id"), (col("rank") / col("deg")).as("w"))
         .groupBy("id").agg(sum("w").as("inflow"))
-      ranks = degs.select(col("id"), col("deg"), col("seed"))
-        .join(inflow, Seq("id"), "left")
+      degs.join(inflow, Seq("id"), "left")
         .crossJoin(broadcast(dangling))
-        .select(col("id"), col("deg"), col("seed"),
-          (when(col("seed"),
-            lit((1.0 - damping) / nS) + lit(damping) * col("dang") / lit(nS))
-            .otherwise(lit(0.0))
-            + lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"))
-        .localCheckpoint()
+        .select(static :+ (teleport
+          + lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"): _*)
     }
-    ranks.select(col("id"), col("rank"))
+    (degs.select(static :+ start.as("rank"): _*).localCheckpoint(), round)
   }
 
   /** q166: suppliers closest to the top customers — personalized PageRank
@@ -385,43 +357,6 @@ object Graph {
         (round(col("rank") * lit(1e8)) / lit(100.0)).as("rank_ppm"))
       .orderBy(col("rank_ppm").desc, col("s_suppkey"))
       .limit(topK)
-  }
-
-  /** One power-iteration round: (id, rank) → (id, prev, rank).
-    *
-    * The dangling-mass total stays INSIDE the plan as a broadcast one-row
-    * aggregate (not a driver `.head()`): the round's only job is the
-    * localCheckpoint materialization. Evaluation order of the update —
-    * ((1−d)/n + d·dangling/n) + d·inflow, doubles throughout — is the
-    * contract the unrolled SQL oracle replicates; don't reassociate it.
-    *
-    * Determinism note: the inflow/dangling sums accumulate raw doubles in
-    * partition-dependent order, so they are NOT bit-identical across runs
-    * — unlike the decimal-snapped aggregates elsewhere in the repo. The
-    * oracle still hash-matches by margin, not by construction: per-round
-    * reassociation error is bounded by n·ε·Σ|x| ≈ 1e-12 on unit mass,
-    * damped by 0.85 per round, while q142 reports ppm rounded to 1e-2 —
-    * ten orders of magnitude of slack. Snapping every per-edge rank/deg
-    * contribution to decimal would push that error to zero at the cost of
-    * decimal math in the hottest per-edge expression; the margin argument
-    * is why the cheap double path is safe here.
-    */
-  private def pageRankStep(ranks: DataFrame, e: DataFrame, degs: DataFrame,
-                           n: Long, damping: Double): DataFrame = {
-    val withDeg = ranks.join(degs, "id")
-    val dangling = withDeg.where(col("deg").isNull)
-      .agg(coalesce(sum("rank"), lit(0.0)).as("dang"))
-    val inflow = withDeg.where(col("deg").isNotNull)
-      .join(e.withColumnRenamed("u", "id"), "id")
-      .select(col("v").as("id"), (col("rank") / col("deg")).as("w"))
-      .groupBy("id").agg(sum("w").as("inflow"))
-    ranks.select(col("id"), col("rank").as("prev"))
-      .join(inflow, Seq("id"), "left")
-      .crossJoin(broadcast(dangling))
-      .select(col("id"), col("prev"),
-        (lit((1.0 - damping) / n) + lit(damping) * col("dang") / lit(n)
-          + lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"))
-      .localCheckpoint()
   }
 
   /** Distributed triangle counting via degree-ordered edge orientation —
@@ -626,34 +561,23 @@ object Graph {
     * @return (id, coreness)
     */
   def coreness(edges: DataFrame, maxIters: Int = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val Array(srcCol, dstCol) = edges.columns
     val raw = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u") =!= col("v"))
     val adj = raw.union(raw.select(col("v"), col("u"))).distinct()
       .localCheckpoint()
-    var c = adj.groupBy(col("u").as("id")).agg(count(lit(1)).as("c"))
+    val c0 = adj.groupBy(col("u").as("id")).agg(count(lit(1)).as("c"))
       .localCheckpoint()
-    var prevSum = c.agg(sum(col("c").cast("decimal(38,0)"))).head().getDecimal(0)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
+    Rounds.untilConverged(maxIters, c0) { c =>
       val nbr = adj.join(c.withColumnRenamed("id", "v")
         .withColumnRenamed("c", "nc"), "v")
       val w = Window.partitionBy("u").orderBy(col("nc").desc)
-      val next = nbr.withColumn("rn", row_number().over(w))
+      nbr.withColumn("rn", row_number().over(w))
         .groupBy(col("u").as("id"))
         .agg(max(least(col("rn"), col("nc"))).as("c"))
-        .localCheckpoint()
-      val s = next.agg(sum(col("c").cast("decimal(38,0)"))).head().getDecimal(0)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      c = next
-      iter += 1
-    }
-    require(converged,
-      s"coreness did not converge within $maxIters rounds; raise maxIters")
-    c.select(col("id"), col("c").as("coreness"))
+    }(sumUnchanged(c0, "c"))
+      .getOrElse(Rounds.notConverged("coreness", maxIters, "raise maxIters"))
+      .select(col("id"), col("c").as("coreness"))
   }
 
   /** q145: Adamic–Adar link prediction on the co-purchase graph — for
@@ -732,49 +656,53 @@ object Graph {
 
   /** Synchronous label-propagation community detection (Raghavan et al.
     * 2007), made DETERMINISTIC: every vertex starts labelled with its own
-    * id and each round SIMULTANEOUSLY adopts the most frequent label among
-    * its neighbours, ties broken by smallest label. The classic algorithm
-    * randomizes update order and tie-breaks to escape oscillation; a
-    * distributed engine wants the opposite trade — a fixed round count
-    * with total tie-order makes the result reproducible and lets an
-    * unrolled-SQL oracle replay it exactly, and synchronous rounds are
-    * what one-shuffle-per-round execution gives for free. Communities are
-    * the coarse complement of coreness: coreness says how deep a vertex
-    * sits, the label says WHICH dense region it sits in.
+    * id and each round SIMULTANEOUSLY adopts the label with the largest
+    * summed edge weight among its neighbours, ties broken by smallest
+    * label. The classic algorithm randomizes update order and tie-breaks
+    * to escape oscillation; a distributed engine wants the opposite trade
+    * — a fixed round count with total tie-order makes the result
+    * reproducible and lets an unrolled-SQL oracle replay it exactly, and
+    * synchronous rounds are what one-shuffle-per-round execution gives for
+    * free. Communities are the coarse complement of coreness: coreness
+    * says how deep a vertex sits, the label says WHICH dense region it
+    * sits in.
+    *
+    * Weights: an optional third column holds integer edge weights, so a
+    * label backed by few strong ties beats one backed by many weak ties
+    * and the argmax compares exact sums. Without it every edge weighs 1,
+    * and the summed weight is exactly the neighbour count.
     *
     * Per round: one join (neighbour label lookup — the symmetrized
     * adjacency is pre-partitioned on the lookup key once, so only the
-    * label side exchanges), one (vertex, label) count aggregate, and a
+    * label side exchanges), one (vertex, label) weight aggregate, and a
     * per-vertex argmax window whose partition size is the vertex's
     * DISTINCT neighbour-label count — bounded by degree, collapsing
-    * toward 1 as labels converge; never a global sort. localCheckpoint
-    * per round keeps the plan O(1) deep.
+    * toward 1 as labels converge; never a global sort.
     *
-    * @param edges  two BIGINT columns (src, dst), undirected — each edge
-    *               in one direction only.
+    * @param edges  (src, dst[, weight]) BIGINT columns, undirected — each
+    *               edge in one direction only.
     * @param rounds fixed round count (diameter-scale rounds are overkill:
     *               LPA community structure stabilizes in a handful).
     * @return (id, label) — label is a community id drawn from the member
     *         vertex ids.
     */
   def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = {
-    val Array(srcCol, dstCol) = edges.columns
-    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-    val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
+    val Array(srcCol, dstCol, wCols @ _*) = edges.columns
+    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"),
+      wCols.headOption.map(col).getOrElse(lit(1L)).as("wt"))
+    val sym = e.union(e.select(col("v").as("u"), col("u").as("v"), col("wt")))
       .repartition(col("v")).localCheckpoint()
-    var labels = sym.select(col("u").as("id")).distinct()
+    val labels = sym.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
       .repartition(col("id")).localCheckpoint()
     val wArg = Window.partitionBy(col("u")).orderBy(col("c").desc, col("label"))
-    for (_ <- 1 to rounds) {
-      labels = sym.join(labels, sym("v") === labels("id"))
-        .groupBy(col("u"), col("label")).agg(count(lit(1)).as("c"))
+    Rounds.fixed(rounds, labels) { (labels, _) =>
+      sym.join(labels, sym("v") === labels("id"))
+        .groupBy(col("u"), col("label")).agg(sum(col("wt")).as("c"))
         .withColumn("rn", row_number().over(wArg))
         .where(col("rn") === 1)
         .select(col("u").as("id"), col("label"))
-        .localCheckpoint()
     }
-    labels
   }
 
   /** q157: label-propagation communities of the part co-purchase graph —
@@ -817,34 +745,6 @@ object Graph {
           / lit(1000000.0)).as("alpha_hat"))
   }
 
-  /** Weighted synchronous label propagation — [[labelPropagation]] with
-    * the argmax taken over SUMMED EDGE WEIGHTS instead of neighbour
-    * counts, so a label backed by few strong ties beats one backed by
-    * many weak ties. Same determinism contract (synchronous rounds,
-    * ties to the smallest label) and the same one-shuffle-per-round
-    * plan; weights are integers, so the argmax compares exact sums.
-    */
-  def labelPropagationWeighted(edges: DataFrame, rounds: Int = 4): DataFrame = {
-    val Array(srcCol, dstCol, wCol) = edges.columns
-    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"),
-      col(wCol).as("wt"))
-    val sym = e.union(e.select(col("v").as("u"), col("u").as("v"), col("wt")))
-      .repartition(col("v")).localCheckpoint()
-    var labels = sym.select(col("u").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .repartition(col("id")).localCheckpoint()
-    val wArg = Window.partitionBy(col("u")).orderBy(col("c").desc, col("label"))
-    for (_ <- 1 to rounds) {
-      labels = sym.join(labels, sym("v") === labels("id"))
-        .groupBy(col("u"), col("label")).agg(sum(col("wt")).as("c"))
-        .withColumn("rn", row_number().over(wArg))
-        .where(col("rn") === 1)
-        .select(col("u").as("id"), col("label"))
-        .localCheckpoint()
-    }
-    labels
-  }
-
   /** q172: support-weighted communities of the co-purchase graph — the
     * weighted twin of q157: the same support≥2 edges, but each
     * neighbour's vote counts its co-purchase support, so communities
@@ -852,8 +752,7 @@ object Graph {
     */
   def copurchaseCommunitiesWeighted(spark: SparkSession,
                                     sfDir: String): DataFrame =
-    labelPropagationWeighted(copurchaseEdgesWeighted(spark, sfDir),
-      rounds = 4)
+    labelPropagation(copurchaseEdgesWeighted(spark, sfDir), rounds = 4)
       .select(col("id").as("part"), col("label").as("community"))
 
   /** q189: rich-club coefficient curve of the co-purchase graph — for each
@@ -1133,17 +1032,15 @@ object Graph {
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
     val adj = e.union(e.select(col("v"), col("u"))).distinct()
       .localCheckpoint()
-    var reach = source.toDF("id").withColumn("dist", lit(0))
+    val reach = source.toDF("id").withColumn("dist", lit(0))
       .localCheckpoint()
-    for (h <- 1 to maxHops) {
+    Rounds.fixed(maxHops, reach) { (reach, h) =>
       val next = adj.join(reach.where(col("dist") === h - 1)
           .withColumnRenamed("id", "u"), "u")
         .select(col("v").as("id"), lit(h).as("dist"))
-      reach = reach.unionAll(next)
+      reach.unionAll(next)
         .groupBy(col("id")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
     }
-    reach
   }
 
   /** q255: landmark distance census of the part co-purchase graph — BFS

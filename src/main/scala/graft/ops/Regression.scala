@@ -81,9 +81,8 @@ object Regression {
   private def fitLogistic(xy: DataFrame, iters: Int): DataFrame = {
     val spark = xy.sparkSession
     import spark.implicits._
-    var beta = Seq((0.0, 0.0)).toDF("b0", "b1")
-    for (_ <- 1 to iters) {
-      val step = xy.crossJoin(broadcast(beta))
+    Rounds.fixed(iters, Seq((0.0, 0.0)).toDF("b0", "b1")) { (beta, _) =>
+      val stats = xy.crossJoin(broadcast(beta))
         .withColumn("t", col("b0") + col("b1") * col("x"))
         .withColumn("p", lit(1.0) / (lit(1.0) + exp(-col("t"))))
         .withColumn("w", col("p") * (lit(1.0) - col("p")))
@@ -100,16 +99,14 @@ object Regression {
             .cast("double").as("h11"))
         .withColumn("det",
           col("h00") * col("h11") - col("h01") * col("h01"))
-      beta = step.select(
+      stats.select(
         snap12(col("b0")
           + (col("h11") * col("g0") - col("h01") * col("g1")) / col("det"))
           .as("b0"),
         snap12(col("b1")
           + (col("h00") * col("g1") - col("h01") * col("g0")) / col("det"))
           .as("b1"))
-        .localCheckpoint()
     }
-    beta
   }
 
   def logisticNewton(spark: SparkSession, sfDir: String): DataFrame = {

@@ -595,12 +595,6 @@ object Relational {
     * bounded self-join on the day.
     */
   def priorityInversionDays(spark: SparkSession, sfDir: String): DataFrame = {
-    // group key as ONE LONG (day·2 + hi-bit) instead of a "day|class"
-    // string: a bijective re-encoding of the same groups, so every
-    // engine aggregate sees the identical row partition — but the
-    // count-and-locate engine hashes/shuffles an 8-byte key instead of a
-    // ~12-char string through its counts/bucket/slice stages
-    // (guide §2.3: narrower types)
     val lat = spread(Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_shipdate"))
       .join(Tables.orders(spark, sfDir)
@@ -608,16 +602,15 @@ object Relational {
         col("l_orderkey") === col("o_orderkey"))
       .select(
         col("l_orderkey"),
-        (floor(unix_timestamp(col("o_orderdate")) / 86400L) * 2
-          + when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L)).cast("long").as("grp"),
+        dayClassKey(floor(unix_timestamp(col("o_orderdate")) / 86400L),
+          col("o_orderpriority").isin("1-URGENT", "2-HIGH")).as("grp"),
         datediff(col("l_shipdate"), col("o_orderdate"))
           .cast("double").as("lat")), col("l_orderkey"))
       .select(col("grp"), col("lat"))
     val med = Percentiles.exactQuantiles(lat, "grp", "lat", Seq("m" -> 0.5))
       .select(col("grp"), col("qv").as("med"))
-      .withColumn("d", floor(col("grp") / 2).cast("long"))
-      .withColumn("cls", when(col("grp") % 2 === 1, "hi").otherwise("lo"))
+      .withColumn("d", keyDay(col("grp")))
+      .withColumn("cls", when(keyIsHi(col("grp")), "hi").otherwise("lo"))
     val hi = med.where(col("cls") === "hi").select(col("d"), col("med").as("mhi"))
     val lo = med.where(col("cls") === "lo").select(col("d"), col("med").as("mlo"))
     val joined = hi.join(lo, "d")
@@ -630,6 +623,23 @@ object Relational {
           / col("n_days_both").cast("double") * lit(10000)) / lit(10000.0))
           .as("inversion_rate"))
   }
+
+  /** q339's group key as ONE LONG (day·2 + hi-bit) instead of a
+    * "day|class" string: a bijective re-encoding of the same groups, so
+    * every engine aggregate sees the identical row partition — but the
+    * count-and-locate engine hashes/shuffles an 8-byte key instead of a
+    * ~12-char string through its counts/bucket/slice stages (guide §2.3:
+    * narrower types). Days before 1970 are negative, so the decode
+    * floors: [[keyDay]] is an arithmetic shift (floor division by 2) and
+    * [[keyIsHi]] a `pmod`, where truncating `div` and `%` would put a
+    * pre-1970 hi-class day into the wrong group.
+    */
+  private[ops] def dayClassKey(day: Column, hi: Column): Column =
+    (day * 2 + when(hi, 1L).otherwise(0L)).cast("long")
+
+  private[ops] def keyDay(grp: Column): Column = shiftright(grp, 1)
+
+  private[ops] def keyIsHi(grp: Column): Column = pmod(grp, lit(2L)) === 1L
 
   /** q329: compound monthly growth rate per brand — the geometric-mean
     * growth over each brand's ACTIVE months, which telescopes: the mean of

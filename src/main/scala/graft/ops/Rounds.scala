@@ -1,0 +1,48 @@
+package graft.ops
+
+import org.apache.spark.sql.DataFrame
+import scala.annotation.tailrec
+
+/** The one round loop behind graft's iterative operators (PageRank, label
+  * propagation, components, k-core, BFS, Lloyd/PQ, PCA power rounds,
+  * Newton logistic, beam walk, MMR).
+  *
+  * Each operator supplies its round body as a plain DataFrame → DataFrame
+  * step; the loop owns the state carry and the per-round materialization.
+  * Every round's result is pinned with `localCheckpoint()` (eager, default
+  * storage level), which truncates lineage so the plan stays O(1) deep at
+  * any round count and keeps the checkpointed plan's output partitioning.
+  * The initial state is the caller's: it is passed in as built, pinned or
+  * not, and never re-materialized here.
+  */
+object Rounds {
+
+  private def pin(df: DataFrame): DataFrame = df.localCheckpoint()
+
+  /** Runs `step(state, round)` for rounds 1..n, pinning each result. */
+  def fixed(n: Int, init: DataFrame)(step: (DataFrame, Int) => DataFrame): DataFrame =
+    (1 to n).foldLeft(init)((state, round) => pin(step(state, round)))
+
+  /** Runs `step` until `done(prev, next)` holds — `next` is already pinned
+    * when `done` runs, so a convergence action reads materialized blocks.
+    * Returns the converged state, or None once `maxIters` rounds pass
+    * without convergence; callers that cannot fall back raise
+    * [[notConverged]].
+    */
+  def untilConverged(maxIters: Int, init: DataFrame)(step: DataFrame => DataFrame)
+                    (done: (DataFrame, DataFrame) => Boolean): Option[DataFrame] = {
+    @tailrec def go(state: DataFrame, round: Int): Option[DataFrame] =
+      if (round == maxIters) None
+      else {
+        val next = pin(step(state))
+        if (done(state, next)) Some(next) else go(next, round + 1)
+      }
+    go(init, 0)
+  }
+
+  /** The shared loud failure for a capped [[untilConverged]] run: a silent
+    * non-converged return would hand callers a wrong answer. */
+  def notConverged(what: String, maxIters: Int, hint: String): Nothing =
+    throw new IllegalArgumentException(
+      s"$what did not converge within $maxIters rounds; $hint")
+}

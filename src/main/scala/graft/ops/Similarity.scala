@@ -659,18 +659,17 @@ object Similarity {
 
     val seedIds = dims.select(col("vec_id")).distinct()
       .orderBy(col("vec_id")).limit(kCodes)
-    var cent = dims.join(broadcast(seedIds), "vec_id")
+    val seeds = dims.join(broadcast(seedIds), "vec_id")
       .select(col("s"), col("vec_id").as("c"), col("i"), col("xd").as("cd"))
       .localCheckpoint()
-    for (_ <- 1 to iters) {
-      cent = assign(cbookOf(cent))
+    val cent = Rounds.fixed(iters, seeds) { (cent, _) =>
+      assign(cbookOf(cent))
         .select(col("s"), col("best.c").as("c"),
           posexplode(arrays_zip(col("idxs"), col("xs"))).as(Seq("p", "z")))
         .select(col("s"), col("c"), col("z.idxs").as("i"), col("z.xs").as("xd"))
         .groupBy(col("s"), col("c"), col("i"))
         .agg((round((sum(col("xd").cast("decimal(28,12)")).cast("double")
           / count(lit(1))) * lit(1e12)) / lit(1e12)).as("cd"))
-        .localCheckpoint()
     }
     (cent, diskCheckpoint(assign(cbookOf(cent))
       .select(col("vec_id"), col("s"), col("best.c").as("c"),
@@ -1386,9 +1385,9 @@ object Similarity {
       .select(col("a"), col("b"),
         round(dotExpr("va", "vb") / (col("na") * col("nb")), 9).as("sim"))
       .localCheckpoint()
-    var selected = rel.limit(0)
+    val none = rel.limit(0)
       .select(col("vec_id"), lit(0.0).as("score"), lit(0).as("rnk"))
-    for (step <- 1 to k) {
+    Rounds.fixed(k, none) { (selected, step) =>
       val maxSim = sims.join(selected.select(col("vec_id").as("b")), "b")
         .groupBy(col("a")).agg(max(col("sim")).as("ms"))
       val next = rel
@@ -1398,9 +1397,8 @@ object Similarity {
           - lit(mu) * coalesce(col("ms"), lit(0.0)), 9))
         .orderBy(col("score").desc, col("vec_id")).limit(1)
         .select(col("vec_id"), col("score"), lit(step).as("rnk"))
-      selected = selected.union(next).localCheckpoint()
-    }
-    selected.select(col("rnk"), col("vec_id"), col("score"))
+      selected.union(next)
+    }.select(col("rnk"), col("vec_id"), col("score"))
   }
 
   def mmrTopK(spark: SparkSession, sfDir: String): DataFrame =
@@ -1515,15 +1513,30 @@ object Similarity {
       .select(col("vec_id"),
         expr("zip_with(v, marr, (x, m) -> x - m)").as("xv"))
       .localCheckpoint()
-    var v = muArr.select(
-      expr("transform(marr, (m, ix) -> IF(ix = 0, 1.0D, 0.0D))").as("varr"))
-    for (_ <- 1 to iters) {
-      // per-round eager materialization is deliberate: lazy chaining was
-      // re-measured on THIS single-use array shape too (nested 1-row
-      // broadcast plans, 12 levels) and was ~25% slower — the deep plan's
-      // analysis/broadcast scheduling costs more than the 1-row
-      // checkpoint per round
-      v = xc.crossJoin(broadcast(v))
+    (xc, powerRounds(xc, muArr, iters))
+  }
+
+  /** `iters` max-normalized power rounds against the centered array table
+    * `x` (vec_id, xv), starting from the first axis e₁ shaped like the
+    * 1-row, 1-array-column frame `like`: each round is
+    * X·(Xᵀv) as a map-only decimal_dot plus one per-dimension decimal
+    * aggregation, then max-normalization and a 1e-12 snap. m = 0 iff the
+    * data is exactly orthogonal to the start vector (axis-aligned
+    * degenerate data): the round then freezes at the zero vector instead
+    * of dividing by zero, and is value-identical whenever m > 0.
+    *
+    * Per-round eager materialization is deliberate: lazy chaining was
+    * re-measured on this single-use array shape (nested 1-row broadcast
+    * plans, 12 levels) and was ~25% slower — the deep plan's
+    * analysis/broadcast scheduling costs more than the 1-row checkpoint
+    * per round.
+    */
+  private def powerRounds(x: DataFrame, like: DataFrame, iters: Int): DataFrame = {
+    val e1 = like.select(expr(
+      s"transform(${like.columns.head}, (a, ix) -> IF(ix = 0, 1.0D, 0.0D))")
+      .as("varr"))
+    Rounds.fixed(iters, e1) { (v, _) =>
+      x.crossJoin(broadcast(v))
         .withColumn("d", DecimalDot(col("xv"), col("varr")))
         .select(col("d"), posexplode(col("xv")).as(Seq("i", "x")))
         .groupBy(col("i"))
@@ -1533,10 +1546,9 @@ object Similarity {
         .select(col("lst"),
           expr("array_max(transform(lst, p -> abs(p.w)))").as("m"))
         .select(expr(
-          "transform(lst, p -> round(p.w / m * 1e12) / 1e12)").as("varr"))
-        .localCheckpoint()
+          "transform(lst, p -> IF(m > 0D, round(p.w / m * 1e12) / 1e12, 0.0D))")
+          .as("varr"))
     }
-    (xc, v)
   }
 
   /** (i, vi) row view of a 1-row loading array — the boundary shape the
@@ -2000,16 +2012,15 @@ object Similarity {
     // first k vector ids via TakeOrderedAndProject (distributed top-k),
     // broadcast back — works for any id layout, not just 0-based dense
     val seedIds = x.select(col("vec_id")).orderBy(col("vec_id")).limit(k)
-    var cent = x.join(broadcast(seedIds), "vec_id")
+    val seeds = x.join(broadcast(seedIds), "vec_id")
       .select(col("vec_id").as("c"), posexplode(col("v")).as(Seq("i", "cd")))
       .localCheckpoint()
-    for (_ <- 1 to iters) {
-      cent = assign(cbookOf(cent))
+    val cent = Rounds.fixed(iters, seeds) { (cent, _) =>
+      assign(cbookOf(cent))
         .select(col("best.c").as("c"), posexplode(col("v")).as(Seq("i", "xd")))
         .groupBy(col("c"), col("i"))
         .agg((round((sum(col("xd").cast("decimal(28,12)")).cast("double")
           / count(lit(1))) * lit(1e12)) / lit(1e12)).as("cd"))
-        .localCheckpoint()
     }
     (cent, assign(cbookOf(cent))
       .select(col("vec_id"), col("best.c").as("c"), col("best.d2").as("d2")))
@@ -2336,26 +2347,9 @@ object Similarity {
       .localCheckpoint()
     val a1 = axp.select(col("vec_id"), col("a"))
     val xp = axp.select(col("vec_id"), col("xv"))
-    var v2 = v1.select(
-      expr("transform(varr, (v, ix) -> IF(ix = 0, 1.0D, 0.0D))").as("varr"))
-    for (_ <- 1 to iters) {
-      // m = 0 iff the residual is exactly orthogonal to the start vector
-      // (axis-aligned degenerate data) — freeze at the zero vector instead
-      // of dividing by zero; loading2/ev2 then report a clean all-zero PC2
-      v2 = xp.crossJoin(broadcast(v2))
-        .withColumn("d", DecimalDot(col("xv"), col("varr")))
-        .select(col("d"), posexplode(col("xv")).as(Seq("i", "x")))
-        .groupBy(col("i"))
-        .agg(sum((col("x") * col("d")).cast("decimal(28,12)"))
-          .cast("double").as("w"))
-        .agg(expr("array_sort(collect_list(struct(i, w)))").as("lst"))
-        .select(col("lst"),
-          expr("array_max(transform(lst, p -> abs(p.w)))").as("m"))
-        .select(expr(
-          "transform(lst, p -> IF(m > 0D, round(p.w / m * 1e12) / 1e12, 0.0D))")
-          .as("varr"))
-        .localCheckpoint()
-    }
+    // a residual orthogonal to the start vector freezes PC2 at zero, so
+    // loading2/ev2 report a clean all-zero component
+    val v2 = powerRounds(xp, v1, iters)
     (xc, v1, a1, xp, v2)
   }
 
@@ -2576,9 +2570,9 @@ object Similarity {
                        rounds: Int): DataFrame = {
     val wP = Window.partitionBy(col("probe_id"))
       .orderBy(col("cos").desc, col("cand"))
-    var visited = pc.join(broadcast(entries), "cand")
+    val start = pc.join(broadcast(entries), "cand")
       .select(col("probe_id"), col("cand"), col("cos"))
-    for (_ <- 1 to rounds) {
+    val visited = Rounds.fixed(rounds, start) { (visited, _) =>
       val frontier = visited.withColumn("rn", row_number().over(wP))
         .where(col("rn") <= beam)
         .select(col("probe_id"), col("cand").as("v"))
@@ -2588,9 +2582,8 @@ object Similarity {
       val nbrs = frontier.join(adj, "v")
         .select(col("probe_id"), col("o").as("cand"))
       val scored = nbrs.join(pc, Seq("probe_id", "cand"))
-      visited = visited.union(scored)
+      visited.union(scored)
         .groupBy(col("probe_id"), col("cand")).agg(max(col("cos")).as("cos"))
-        .localCheckpoint()
     }
     val beamTop = visited.where(col("cand") =!= col("probe_id"))
       .withColumn("rn", row_number().over(wP))

@@ -44,6 +44,21 @@ class GraphSpec extends SparkSpec {
       Graph.connectedComponents(edges.toDF("src", "dst"), maxIters = 1).collect()
     }
     assert(ex.getMessage.contains("did not converge"))
+    // PageRank's L1 delta cannot reach 1e-12 in two rounds off the
+    // uniform start on a graph with a hub and a dangling vertex
+    val pr = intercept[IllegalArgumentException] {
+      Graph.pageRank(Seq((1L, 4L), (2L, 4L), (3L, 4L), (4L, 5L)).toDF("s", "d"),
+        tol = 1e-12, maxIters = 2).collect()
+    }
+    assert(pr.getMessage.contains("pageRank did not converge within 2 rounds"))
+    // K4 plus a tail: the tail's degree-2 vertex drops to core 1 in the
+    // first h-index round, so one round cannot confirm the fixpoint
+    val k4Tail = (for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)) ++
+      Seq((4L, 5L), (5L, 6L))
+    val kc = intercept[IllegalArgumentException] {
+      Graph.coreness(k4Tail.toDF("src", "dst"), maxIters = 1).collect()
+    }
+    assert(kc.getMessage.contains("coreness did not converge within 1 rounds"))
   }
 
   test("star contraction converges on a long path where min-label cannot") {
@@ -176,6 +191,44 @@ class GraphSpec extends SparkSpec {
     val got = Graph.labelPropagation(edges.toDF("src", "dst"), rounds = 3)
       .as[(Long, Long)].collect().toMap
     assert(got === referenceLpa(edges, 3))
+  }
+
+  // plain-Scala synchronous LPA whose vote is the summed edge weight
+  private def referenceWeightedLpa(edges: Seq[(Long, Long, Long)],
+                                   rounds: Int): Map[Long, Long] = {
+    val sym = edges.flatMap { case (u, v, w) => Seq((u, v, w), (v, u, w)) }
+    val adj = sym.groupBy(_._1).map { case (u, es) => u -> es.map(e => (e._2, e._3)) }
+    var lab = adj.keys.map(v => v -> v).toMap
+    for (_ <- 1 to rounds) {
+      lab = adj.map { case (u, nbrs) =>
+        val votes = nbrs.groupBy(p => lab(p._1))
+          .map { case (l, ps) => (l, ps.map(_._2).sum) }
+        // heaviest neighbour label, ties to the smallest label
+        u -> votes.toSeq.minBy { case (l, w) => (-w, l) }._1
+      }
+    }
+    lab
+  }
+
+  test("weighted labelPropagation votes by summed weight, not by count") {
+    // round 1: vertex 10 sees labels 1, 2 and 3 once each — by count the
+    // tie goes to label 1, by weight its weight-9 tie to 3 wins
+    val edges = Seq((1L, 2L, 5L), (1L, 10L, 1L), (2L, 10L, 1L),
+      (3L, 10L, 9L), (3L, 4L, 2L))
+    val got = Graph.labelPropagation(edges.toDF("src", "dst", "w"), rounds = 2)
+      .as[(Long, Long)].collect().toMap
+    val want = referenceWeightedLpa(edges, 2)
+    assert(got === want)
+    assert(want !== referenceLpa(edges.map(e => (e._1, e._2)), 2))
+    // and on a random weighted graph over more rounds
+    val rnd = new scala.util.Random(11)
+    val random = (1L to 80L).flatMap { v =>
+      (1 to (1 + rnd.nextInt(3))).map(_ =>
+        (rnd.nextLong().abs % v, v, 1L + rnd.nextInt(6)))
+    }.filter(p => p._1 != p._2).groupBy(p => (p._1, p._2)).values.map(_.head).toSeq
+    val gotRandom = Graph.labelPropagation(random.toDF("src", "dst", "w"), rounds = 4)
+      .as[(Long, Long)].collect().toMap
+    assert(gotRandom === referenceWeightedLpa(random, 4))
   }
 
   // independent plain-Scala power iteration for cross-validation
