@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 /** Per-query wall-clock benchmark. One untimed warmup pass first (pays JIT +
@@ -41,33 +42,63 @@ import scala.util.control.NonFatal
   *
   * Override passes with SPARK_GRAFT_BENCH_WARMUP / SPARK_GRAFT_BENCH_RUNS;
   * disable the budget with SPARK_GRAFT_BENCH_BUDGET_SEC=0.
+  *
+  * Execution counters: one listener counts the jobs, stages, tasks and task
+  * seconds of every timed call, attributed by a per-call job-local property,
+  * and BENCH_spread.json lists them per pass in pass order. Unlike wall
+  * time they repeat run to run, so a rise is a plan regression even when
+  * drift hides it (`tools/diff_counters.py` compares two spread files).
   */
 object Bench {
+  /** Job-local property naming the timed call ("<query>#<pass>"). */
+  private val TagKey = "graft.bench.call"
+
+  /** Jobs, stages, tasks and task nanos per call tag. Updated on the
+    * listener-bus thread only; read after `spark.stop()`, which drains and
+    * joins that thread. */
+  private final class Counters extends SparkListener {
+    val counts = mutable.Map.empty[String, Array[Long]]
+    private val stageTag = mutable.Map.empty[Int, String]
+    private def tagOf(p: java.util.Properties): String =
+      if (p == null) null else p.getProperty(TagKey)
+    private def add(tag: String, i: Int, n: Long): Unit =
+      if (tag != null) counts.getOrElseUpdate(tag, new Array[Long](4))(i) += n
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      add(tagOf(j.properties), 0, 1)
+    override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
+      val tag = tagOf(s.properties)
+      if (tag != null) stageTag(s.stageInfo.stageId) = tag
+    }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      add(stageTag.remove(s.stageInfo.stageId).orNull, 1, 1)
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      val tag = stageTag.get(t.stageId).orNull
+      add(tag, 2, 1)
+      if (t.taskInfo != null) add(tag, 3, t.taskInfo.duration * 1000000L)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val t0wall = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmups = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "2700").toDouble
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.getOrCreate()
     // ERROR, not WARN: the r11 driver tail was 2000 chars of WindowExec
     // WARN spam with the metric line scrolled out — benign warnings must
     // never displace the one line the driver parses.
     spark.sparkContext.setLogLevel("ERROR")
+    val counters = new Counters
+    spark.sparkContext.addSparkListener(counters)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     def elapsed(): Double = (System.nanoTime() - t0wall) / 1e9
     def fits(nextPassSec: Double): Boolean =
       budgetSec <= 0 || elapsed() + nextPassSec <= budgetSec
-    val errors = scala.collection.mutable.Map.empty[String, Int]
+    val errors = mutable.Map.empty[String, Int]
+    val errorMessages = mutable.Map.empty[String, String]
     // only TIMED-pass failures divert the artifact: a warmup hiccup with
     // clean timed passes is noise, but timed failures mean the timings are
     // not a measurement of the full surface
@@ -77,13 +108,18 @@ object Bench {
     // pays the build in its own timed slot and later consumers reuse it
     // (cross-query CSE), but nothing is ever served from a previous pass —
     // per-pass totals stay an honest compute-from-parquet measurement.
-    def onePass(timed: Boolean): Map[String, Double] = {
+    // `pass` is the timed pass index, None for a warmup (counted nowhere)
+    def onePass(pass: Option[Int]): Map[String, Double] = {
       graft.ops.SharedState.clear()
       ordered.map { case (name, fn) =>
+        spark.sparkContext.setLocalProperty(TagKey, pass.map(p => s"$name#$p").orNull)
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable =>
-            if (timed) errors(name) = errors.getOrElse(name, 0) + 1
+          catch { case e: Throwable =>
+            if (pass.isDefined) {
+              errors(name) = errors.getOrElse(name, 0) + 1
+              errorMessages.getOrElseUpdate(name, s"${e.getClass.getName}: ${e.getMessage}")
+            }
             false
           }
         name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
@@ -96,7 +132,7 @@ object Bench {
       // warmups yield to the budget
       if (i == 1 || fits(lastPassSec)) {
         val t = System.nanoTime()
-        onePass(timed = false)
+        onePass(None)
         lastPassSec = (System.nanoTime() - t) / 1e9
         warmupsDone += 1
       }
@@ -105,10 +141,18 @@ object Bench {
     var i = 0
     while (i < runs && (passes.isEmpty || fits(lastPassSec))) {
       val t = System.nanoTime()
-      passes += onePass(timed = true)
+      passes += onePass(Some(passes.length))
       lastPassSec = (System.nanoTime() - t) / 1e9
       i += 1
     }
+    val wallAtStop = elapsed()
+    // Stop before writing or printing: the stop drains the listener bus, so
+    // the counters are complete, and no Spark shutdown log line can land
+    // after (and displace) the JSON lines at the end of stdout. A failing
+    // stop must not cost the run its results: report it on stderr and
+    // still write and print everything.
+    try spark.stop() catch { case NonFatal(e) =>
+      System.err.println(s"[bench] spark.stop() failed: $e") }
     def fmt(d: Double): String = BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
     val spread = ordered.map { case (name, _) =>
       val xs = passes.map(_(name)).filter(_ >= 0).sorted.toIndexedSeq
@@ -128,8 +172,10 @@ object Bench {
     val nErr = errors.values.sum
     val errJson = errors.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val errMsgJson = errorMessages.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"\"" + k + "\":" + Verify.jsonString(v) }.mkString("{", ",", "}")
     val meta = s""""sf":"$sfDir","warmups":$warmupsDone,"runs":${passes.length},"errors":$nErr"""
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$meta,"error_queries":$errJson}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$meta,"error_queries":$errJson,"error_messages":$errMsgJson}"""
     def writeFile(path: String, body: String): Unit = {
       val tmp = java.nio.file.Paths.get(path + ".tmp")
       java.nio.file.Files.write(tmp,
@@ -147,20 +193,19 @@ object Bench {
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
     writeFile(out, fullLine)
     val spreadJson = spread.map { case (k, (mn, med, sd, xs)) =>
+      val perPass = passes.indices.map(p =>
+        counters.counts.getOrElse(s"$k#$p", new Array[Long](4)))
+      def field(f: String, i: Int, show: Long => String) =
+        s",\"$f\":" + perPass.map(c => show(c(i))).mkString("[", ",", "]")
       s"\"" + k + "\":{\"min\":" + fmt(mn) + ",\"median\":" + fmt(med) +
-        ",\"stdev\":" + fmt(sd) + ",\"runs\":[" + xs.map(fmt).mkString(",") + "]}"
+        ",\"stdev\":" + fmt(sd) + ",\"runs\":[" + xs.map(fmt).mkString(",") + "]" +
+        field("jobs", 0, _.toString) + field("stages", 1, _.toString) +
+        field("tasks", 2, _.toString) + field("task_s", 3, n => fmt(n / 1e9)) + "}"
     }.mkString("{", ",", "}")
     writeFile(out.stripSuffix(".json") + "_spread.json",
       s"""{"metric":"total","value":$total,"unit":"sec",$meta,"n_queries":${results.size},"queries":$spreadJson}""")
     val top = results.sortBy(-_._2).take(10)
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    // stop the session BEFORE printing: no Spark shutdown log line can
-    // land after (and displace) the JSON lines in the driver's tail
-    val wallAtStop = elapsed()
-    // a failing stop must not cost the run its results: report it on
-    // stderr and still print both lines
-    try spark.stop() catch { case NonFatal(e) =>
-      System.err.println(s"[bench] spark.stop() failed: $e") }
     println(fullLine)
     // compact final line — MUST stay well under the driver's 2000-char tail
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$meta,"n_queries":${results.size},"wall_sec":${fmt(wallAtStop)},"queries_file":"$out","spread_file":"${out.stripSuffix(".json")}_spread.json","slowest10":$top}""")

@@ -2,17 +2,25 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's standard configuration.
+/** The engine's one session factory: every main and spec gets its session
+  * here, so the plans that are verified, timed, explained and benchmarked
+  * are the same plans.
   *
-  * Tuned for correctness parity with the DuckDB oracle (UTC, ANSI off for
-  * permissive casts) and for scale (AQE with coalesce + skew-join handling;
-  * shuffle partitions sized to local cores — on a real cluster this is set
-  * per-deployment, AQE coalesces down from a high initial number).
+  * Settings that differ from Spark's defaults: the graft extensions, UTC
+  * (oracle parity), a 64 MB broadcast threshold, and the RocksDB state
+  * store, which `transformWithState` streams require. AQE with coalesce and
+  * skew-join handling and parquet filter pushdown are Spark's defaults.
+  * Shuffle partitions are sized to local cores; on a real cluster this is
+  * set per deployment.
   */
 object GraftSession {
+  /** Local cores to use: `SPARK_GRAFT_CPUS`, else the machine's count. */
+  private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   def getOrCreate(
-      master: String = "local[32]",
-      shufflePartitions: Int = 32
+      master: String = s"local[$cpus]",
+      shufflePartitions: Int = cpus
   ): SparkSession = {
     val spark = SparkSession
       .builder()
@@ -21,11 +29,9 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.parquet.filterPushdown", "true")
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

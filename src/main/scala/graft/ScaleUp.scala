@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger scale factor from an existing one by stamping K
@@ -58,14 +58,7 @@ object ScaleUp {
       else None
     val skew = args.length > 4 && args(4) == "skew"
     val tag = if (args.length > 5) args(5) else s"$copies:${skew.toString}"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
 
     def want(t: String): Boolean = tableFilter.forall(_.contains(t))
 

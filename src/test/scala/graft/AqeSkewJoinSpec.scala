@@ -21,19 +21,13 @@ class AqeSkewJoinSpec extends SparkSpec {
       .toDF("k", "payload")
     val right = (1L to 100L).map(k => (k, s"dim$k")).toDF("k", "attr")
 
-    val prev = Map(
-      "spark.sql.autoBroadcastJoinThreshold" -> spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold"),
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> spark.conf.getOption("spark.sql.adaptive.skewJoin.skewedPartitionFactor"),
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> spark.conf.getOption("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"),
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> spark.conf.getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    try {
-      // no broadcast (skew-split only applies to shuffle joins) and
-      // test-sized skew thresholds — production keeps the defaults
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64KB")
-
+    // no broadcast (skew-split only applies to shuffle joins) and
+    // test-sized skew thresholds — production keeps the defaults
+    withConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB") {
       val joined = left.join(right, "k")
       // collect() drives THIS DataFrame's QueryExecution (count() would
       // spawn a separate one and leave this plan unexecuted/non-final)
@@ -42,9 +36,6 @@ class AqeSkewJoinSpec extends SparkSpec {
       assert(plan.contains("isFinalPlan=true"), s"expected an executed adaptive plan:\n$plan")
       assert(plan.contains("skew=true"),
         s"expected AQE to mark the join skew-split in:\n$plan")
-    } finally prev.foreach {
-      case (key, Some(v)) => spark.conf.set(key, v)
-      case (key, None) => spark.conf.unset(key)
     }
   }
 
@@ -70,23 +61,16 @@ class AqeSkewJoinSpec extends SparkSpec {
       .toDF("event_type", "es")
       .select($"event_type", $"es".cast("timestamp").as("ts"))
 
-    val prev = Map(
-      "spark.sql.autoBroadcastJoinThreshold" -> spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold"),
-      "spark.sql.shuffle.partitions" -> spark.conf.getOption("spark.sql.shuffle.partitions"),
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> spark.conf.getOption("spark.sql.adaptive.skewJoin.skewedPartitionFactor"),
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> spark.conf.getOption("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"),
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> spark.conf.getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    try {
-      // shuffle join only (the 1-row ref lookup keeps its explicit
-      // broadcast hint); 16 partitions so the 3 replicated hot-band ids
-      // land in a few partitions while the median partition stays tiny;
-      // test-sized skew thresholds — production keeps the defaults
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.shuffle.partitions", "16")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64KB")
-
+    // shuffle join only (the 1-row ref lookup keeps its explicit
+    // broadcast hint); 16 partitions so the 3 replicated hot-band ids
+    // land in a few partitions while the median partition stays tiny;
+    // test-sized skew thresholds — production keeps the defaults
+    withConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB") {
       val res = Ranges.bandJoin(events)
       val n = res.collect().length
       assert(n > 0, "hot band must produce matched series rows")
@@ -94,9 +78,6 @@ class AqeSkewJoinSpec extends SparkSpec {
       assert(plan.contains("isFinalPlan=true"))
       assert(plan.contains("skew=true"),
         s"expected AQE to skew-split the hot band bucket in:\n$plan")
-    } finally prev.foreach {
-      case (key, Some(v)) => spark.conf.set(key, v)
-      case (key, None) => spark.conf.unset(key)
     }
   }
 
@@ -116,17 +97,11 @@ class AqeSkewJoinSpec extends SparkSpec {
       (0 until 500).map(i => ((10000 + i).toLong, s"u${i}a u${i}b u${i}c u${i}d u${i}e", "s")))
       .toDF("doc_id", "text", "source")
 
-    val prev = Map(
-      "spark.sql.autoBroadcastJoinThreshold" -> spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold"),
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> spark.conf.getOption("spark.sql.adaptive.skewJoin.skewedPartitionFactor"),
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> spark.conf.getOption("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"),
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> spark.conf.getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
-
+    withConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB") {
       // MEASURED BOUNDARY, pinned as assertions: AQE skew-split cannot
       // reach the dedup joins, for two structural reasons —
       //
@@ -173,9 +148,6 @@ class AqeSkewJoinSpec extends SparkSpec {
         .where($"doc_a" < $"doc_b").count()
       assert(cappedPairs === 0L)
       assert(Dedup.ngramJaccardCapped(docs, minJaccard = 0.5, maxDf = 5).count() === 0L)
-    } finally prev.foreach {
-      case (key, Some(v)) => spark.conf.set(key, v)
-      case (key, None) => spark.conf.unset(key)
     }
   }
 }

@@ -10,9 +10,8 @@ class BucketingSpec extends SparkSpec {
     val dims = (0L until 50L).map(k => (k, s"dim$k")).toDF("k", "attr")
     Bucketing.writeBucketed(facts, "graft_bkt_facts", "k", 8)
     Bucketing.writeBucketed(dims, "graft_bkt_dims", "k", 8)
-    try {
-      // disable broadcast so the join would otherwise need a shuffle
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // disable broadcast so the join would otherwise need a shuffle
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = Bucketing.bucketedJoin(spark, "graft_bkt_facts", "graft_bkt_dims", "k")
       assert(joined.count() === 1000)
       val plan = joined.queryExecution.executedPlan.toString
@@ -23,7 +22,6 @@ class BucketingSpec extends SparkSpec {
       val plain = spark.table("graft_plain_facts").join(spark.table("graft_plain_dims"), "k")
       assert(plain.queryExecution.executedPlan.toString.contains("Exchange"))
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       spark.sql("DROP TABLE IF EXISTS graft_bkt_facts")
       spark.sql("DROP TABLE IF EXISTS graft_bkt_dims")
     }

@@ -28,20 +28,16 @@ class CoverageStreamSpec extends SparkSpec {
 
   private def runSliced(slices: Seq[Seq[SensorReading]]): Map[String, CoverageSnapshot] = {
     implicit val ctx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val mem = MemoryStream[SensorReading]
+    val name = s"cov_${System.nanoTime()}"
+    val q = CoverageStream.run(mem.toDS(), lenSec = 60).writeStream
+      .format("memory").queryName(name).outputMode("append").start()
     try {
-      val mem = MemoryStream[SensorReading]
-      val name = s"cov_${System.nanoTime()}"
-      val q = CoverageStream.run(mem.toDS(), lenSec = 60).writeStream
-        .format("memory").queryName(name).outputMode("append").start()
-      try {
-        slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
-        spark.table(name).as[CoverageSnapshot].collect()
-          .zipWithIndex.groupBy(_._1.event_type)
-          .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
-      } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
+      spark.table(name).as[CoverageSnapshot].collect()
+        .zipWithIndex.groupBy(_._1.event_type)
+        .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
+    } finally q.stop()
   }
 
   test("streaming coverage matches batch q290 across three slicings") {

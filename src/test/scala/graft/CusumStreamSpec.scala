@@ -41,20 +41,16 @@ class CusumStreamSpec extends SparkSpec {
   private def runSliced(slices: Seq[Seq[SensorReading]],
                         params: Map[String, CusumParams]): Map[String, CusumSnapshot] = {
     implicit val ctx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val mem = MemoryStream[SensorReading]
+    val name = s"cusum_${System.nanoTime()}"
+    val q = CusumStream.run(mem.toDS(), params).writeStream
+      .format("memory").queryName(name).outputMode("append").start()
     try {
-      val mem = MemoryStream[SensorReading]
-      val name = s"cusum_${System.nanoTime()}"
-      val q = CusumStream.run(mem.toDS(), params).writeStream
-        .format("memory").queryName(name).outputMode("append").start()
-      try {
-        slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
-        spark.table(name).as[CusumSnapshot].collect()
-          .zipWithIndex.groupBy(_._1.event_type)
-          .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
-      } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
+      spark.table(name).as[CusumSnapshot].collect()
+        .zipWithIndex.groupBy(_._1.event_type)
+        .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
+    } finally q.stop()
   }
 
   test("streaming CUSUM matches batch q139 across three slicings") {

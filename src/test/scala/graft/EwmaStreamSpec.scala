@@ -27,18 +27,14 @@ class EwmaStreamSpec extends SparkSpec {
 
   private def runSliced(slices: Seq[Seq[SensorReading]]): Seq[EwmaPoint] = {
     implicit val ctx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val mem = MemoryStream[SensorReading]
+    val name = s"ewma_${System.nanoTime()}"
+    val q = EwmaStream.run(mem.toDS()).writeStream
+      .format("memory").queryName(name).outputMode("append").start()
     try {
-      val mem = MemoryStream[SensorReading]
-      val name = s"ewma_${System.nanoTime()}"
-      val q = EwmaStream.run(mem.toDS()).writeStream
-        .format("memory").queryName(name).outputMode("append").start()
-      try {
-        slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
-        spark.table(name).as[EwmaPoint].collect().toSeq
-      } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
+      spark.table(name).as[EwmaPoint].collect().toSeq
+    } finally q.stop()
   }
 
   test("streaming EWMA matches batch q110 across three slicings") {

@@ -42,20 +42,16 @@ class ExtremalStreamSpec extends SparkSpec {
   private def runSliced(slices: Seq[Seq[SensorReading]],
                         thr: Map[String, Double]): Map[String, ExtremalSnapshot] = {
     implicit val ctx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val mem = MemoryStream[SensorReading]
+    val name = s"ext_${System.nanoTime()}"
+    val q = ExtremalStream.run(mem.toDS(), thr).writeStream
+      .format("memory").queryName(name).outputMode("append").start()
     try {
-      val mem = MemoryStream[SensorReading]
-      val name = s"ext_${System.nanoTime()}"
-      val q = ExtremalStream.run(mem.toDS(), thr).writeStream
-        .format("memory").queryName(name).outputMode("append").start()
-      try {
-        slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
-        spark.table(name).as[ExtremalSnapshot].collect()
-          .zipWithIndex.groupBy(_._1.event_type)
-          .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
-      } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
+      spark.table(name).as[ExtremalSnapshot].collect()
+        .zipWithIndex.groupBy(_._1.event_type)
+        .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
+    } finally q.stop()
   }
 
   test("streaming extremal index matches batch q368 across three slicings") {

@@ -39,20 +39,16 @@ class HampelStreamSpec extends SparkSpec {
   private def runSliced(slices: Seq[Seq[SensorReading]])
       : Map[String, HampelSnapshot] = {
     implicit val ctx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val mem = MemoryStream[SensorReading]
+    val name = s"hampel_${System.nanoTime()}"
+    val q = HampelStream.run(mem.toDS()).writeStream
+      .format("memory").queryName(name).outputMode("append").start()
     try {
-      val mem = MemoryStream[SensorReading]
-      val name = s"hampel_${System.nanoTime()}"
-      val q = HampelStream.run(mem.toDS()).writeStream
-        .format("memory").queryName(name).outputMode("append").start()
-      try {
-        slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
-        spark.table(name).as[HampelSnapshot].collect()
-          .zipWithIndex.groupBy(_._1.series_key)
-          .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
-      } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
+      spark.table(name).as[HampelSnapshot].collect()
+        .zipWithIndex.groupBy(_._1.series_key)
+        .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
+    } finally q.stop()
   }
 
   test("streaming Hampel matches batch q415 across three slicings") {

@@ -19,51 +19,47 @@ class HoltStreamSpec extends SparkSpec {
 
   test("streaming Holt matches batch q251 across micro-batch boundaries") {
     implicit val ctx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // day 2 is split across micro-batches r2/r3, so the open-day
+    // accumulator must survive a batch boundary; batches advance event
+    // time so no key falls behind the global watermark
+    val r1 = Seq(
+      SensorReading("a", 1L, ts(0, 10), 8.0),
+      SensorReading("a", 2L, ts(0, 20), 12.0),
+      SensorReading("b", 3L, ts(0, 5), 1.0),
+      SensorReading("a", 4L, ts(1, 10), 13.0),
+      SensorReading("b", 5L, ts(1, 5), 2.0))
+    val r2 = Seq(
+      SensorReading("a", 6L, ts(2, 10), 16.0),
+      SensorReading("b", 7L, ts(2, 5), 4.0))
+    val r3 = Seq(
+      SensorReading("a", 8L, ts(2, 20), 18.0))
+    val mem = MemoryStream[SensorReading]
+    val q = HoltStream.run(mem.toDS()).writeStream
+      .format("memory").queryName("holt").outputMode("append").start()
     try {
-      // day 2 is split across micro-batches r2/r3, so the open-day
-      // accumulator must survive a batch boundary; batches advance event
-      // time so no key falls behind the global watermark
-      val r1 = Seq(
-        SensorReading("a", 1L, ts(0, 10), 8.0),
-        SensorReading("a", 2L, ts(0, 20), 12.0),
-        SensorReading("b", 3L, ts(0, 5), 1.0),
-        SensorReading("a", 4L, ts(1, 10), 13.0),
-        SensorReading("b", 5L, ts(1, 5), 2.0))
-      val r2 = Seq(
-        SensorReading("a", 6L, ts(2, 10), 16.0),
-        SensorReading("b", 7L, ts(2, 5), 4.0))
-      val r3 = Seq(
-        SensorReading("a", 8L, ts(2, 20), 18.0))
-      val mem = MemoryStream[SensorReading]
-      val q = HoltStream.run(mem.toDS()).writeStream
-        .format("memory").queryName("holt").outputMode("append").start()
-      try {
-        mem.addData(r1: _*); q.processAllAvailable()
-        mem.addData(r2: _*); q.processAllAvailable()
-        mem.addData(r3: _*); q.processAllAvailable()
-        // the memory sink appends in batch order: the LAST snapshot per
-        // key is the end-of-stream view
-        val last = spark.table("holt").as[HoltSnapshot].collect()
-          .zipWithIndex.groupBy(_._1.event_type)
-          .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
-        val batchDf = (r1 ++ r2 ++ r3)
-          .map(r => (r.event_id, r.ts, 1L, r.event_type, r.value))
-          .toDF("event_id", "ts", "user_id", "event_type", "value")
-        val batch = graft.ops.TimeSeries.holtLinear(batchDf)
-          .collect().map(r => r.getAs[String]("event_type") -> r).toMap
-        for (k <- Seq("a", "b")) {
-          val s = last(k); val b = batch(k)
-          assert(s.n_days == b.getAs[Long]("n_days"))
-          assert(s.level == b.getAs[Double]("level"),
-            s"level $k stream=${s.level} batch=${b.getAs[Double]("level")}")
-          assert(s.trend == b.getAs[Double]("trend"))
-          assert(s.forecast_7d == b.getAs[Double]("forecast_7d"))
-          assert(s.mae == b.getAs[Double]("mae"))
-        }
-      } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      mem.addData(r1: _*); q.processAllAvailable()
+      mem.addData(r2: _*); q.processAllAvailable()
+      mem.addData(r3: _*); q.processAllAvailable()
+      // the memory sink appends in batch order: the LAST snapshot per
+      // key is the end-of-stream view
+      val last = spark.table("holt").as[HoltSnapshot].collect()
+        .zipWithIndex.groupBy(_._1.event_type)
+        .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
+      val batchDf = (r1 ++ r2 ++ r3)
+        .map(r => (r.event_id, r.ts, 1L, r.event_type, r.value))
+        .toDF("event_id", "ts", "user_id", "event_type", "value")
+      val batch = graft.ops.TimeSeries.holtLinear(batchDf)
+        .collect().map(r => r.getAs[String]("event_type") -> r).toMap
+      for (k <- Seq("a", "b")) {
+        val s = last(k); val b = batch(k)
+        assert(s.n_days == b.getAs[Long]("n_days"))
+        assert(s.level == b.getAs[Double]("level"),
+          s"level $k stream=${s.level} batch=${b.getAs[Double]("level")}")
+        assert(s.trend == b.getAs[Double]("trend"))
+        assert(s.forecast_7d == b.getAs[Double]("forecast_7d"))
+        assert(s.mae == b.getAs[Double]("mae"))
+      }
+    } finally q.stop()
   }
 
   test("foldDay walks the textbook Holt recursion") {

@@ -38,20 +38,16 @@ class HoltWintersStreamSpec extends SparkSpec {
 
   private def runSliced(slices: Seq[Seq[SensorReading]]): Map[String, HwSnapshot] = {
     implicit val ctx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val mem = MemoryStream[SensorReading]
+    val name = s"hw_${System.nanoTime()}"
+    val q = HoltWintersStream.run(mem.toDS()).writeStream
+      .format("memory").queryName(name).outputMode("append").start()
     try {
-      val mem = MemoryStream[SensorReading]
-      val name = s"hw_${System.nanoTime()}"
-      val q = HoltWintersStream.run(mem.toDS()).writeStream
-        .format("memory").queryName(name).outputMode("append").start()
-      try {
-        slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
-        spark.table(name).as[HwSnapshot].collect()
-          .zipWithIndex.groupBy(_._1.event_type)
-          .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
-      } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
+      spark.table(name).as[HwSnapshot].collect()
+        .zipWithIndex.groupBy(_._1.event_type)
+        .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
+    } finally q.stop()
   }
 
   test("streaming Holt-Winters matches batch q273 across three slicings") {

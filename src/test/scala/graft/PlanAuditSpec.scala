@@ -434,9 +434,8 @@ class PlanAuditSpec extends SparkSpec {
 
   test("whole-stage codegen covers the relational core") {
     // The AQE wrapper hides codegen spans until execution; the static plan
-    // (AQE off) shows them. Scoped conf flip, restored in finally.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    // (AQE off) shows them.
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       for (name <- Seq("q13_pricing_summary", "q14_top_revenue",
                        "q16_window_topn", "q45_window_suite")) {
         val plan = SparkEntry.queries(name)(spark, sfDir)
@@ -444,6 +443,6 @@ class PlanAuditSpec extends SparkSpec {
         assert(plan.contains("codegen id"),
           s"$name has no whole-stage-codegen span (no [codegen id : N] marker)")
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 }

@@ -26,9 +26,6 @@ class Scd2StreamSpec extends SparkSpec {
   )
 
   test("streaming closed intervals equal the batch q94 build across batches") {
-    // transformWithState requires the RocksDB state store
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val ctx = spark.sqlContext
     val mem = MemoryStream[TypedEvent]
     // wide watermark: user 2's events arrive a micro-batch after user 1's
@@ -54,10 +51,7 @@ class Scd2StreamSpec extends SparkSpec {
 
       assert(got === want)
       assert(got.size === 3) // on@user1, off@user1, idle@user2 closed
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    } finally q.stop()
   }
 
   test("stream-static point-in-time enrichment equals the batch join") {
@@ -102,8 +96,6 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("processor state survives a checkpointed query restart") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val ctx = spark.sqlContext
     val out = java.nio.file.Files.createTempDirectory("scd2_out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("scd2_ckpt").toString
@@ -133,9 +125,6 @@ class Scd2StreamSpec extends SparkSpec {
         .as[(Long, String, Long, Long, Long)].collect().toSeq
       val t0 = ts(0, 0).getTime / 1000
       assert(rows === Seq((1L, "on", t0, t0 + 1200, 2L)))
-    } finally {
-      q2.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    } finally q2.stop()
   }
 }
