@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** One coverage snapshot per key per batch — the same columns the q290
   * batch query reports, so the two are directly comparable.
@@ -34,60 +32,42 @@ case class CoverageState(segStart: Long, segEnd: Long, closedSec: Long,
   */
 object CoverageStream {
 
-  class CoverageProcessor(lenSec: Int)
-      extends StatefulProcessor[String, SensorReading, CoverageSnapshot] {
-    @transient private var st: ValueState[CoverageState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState("cov", Encoders.product[CoverageState],
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[SensorReading],
-        timerValues: TimerValues): Iterator[CoverageSnapshot] = {
-      var s = if (st.exists()) st.get()
-        else CoverageState(Long.MinValue, Long.MinValue, 0L, 0L, 0L,
-          Long.MinValue, Long.MinValue)
-      rows.toArray
-        .map(r => math.floorDiv(StreamTime.micros(r.ts), 1000000L))
-        .sorted
-        .foreach { start =>
-          val end = start + lenSec
-          // in-order guard: same (s, e) total order as the batch sweep
-          if (s.nIntervals == 0L
-            || start > s.lastS || (start == s.lastS && end >= s.lastE)) {
-            if (s.segStart == Long.MinValue) {
-              s = s.copy(segStart = start, segEnd = end)
-            } else if (start > s.segEnd) {
-              s = s.copy(closedSec = s.closedSec + (s.segEnd - s.segStart),
-                nClosed = s.nClosed + 1, segStart = start, segEnd = end)
-            } else if (end > s.segEnd) {
-              s = s.copy(segEnd = end)
-            }
-            s = s.copy(nIntervals = s.nIntervals + 1, lastS = start,
-              lastE = end)
-          }
-        }
-      st.update(s)
-      if (s.nIntervals == 0L) Iterator.empty
-      else {
-        val covered = s.closedSec + (s.segEnd - s.segStart)
-        val merged = s.nClosed + 1
-        Iterator.single(CoverageSnapshot(key, s.nIntervals, merged, covered,
-          math.round(merged.toDouble / s.nIntervals * 10000) / 10000.0))
-      }
-    }
+  private def step(s: CoverageState, r: SensorReading,
+                   lenSec: Int): CoverageState = {
+    val start = StreamTime.seconds(r.ts)
+    val end = start + lenSec
+    // in-order guard: same (s, e) total order as the batch sweep
+    if (s.nIntervals == 0L
+      || start > s.lastS || (start == s.lastS && end >= s.lastE)) {
+      val merged =
+        if (s.segStart == Long.MinValue) s.copy(segStart = start, segEnd = end)
+        else if (start > s.segEnd)
+          s.copy(closedSec = s.closedSec + (s.segEnd - s.segStart),
+            nClosed = s.nClosed + 1, segStart = start, segEnd = end)
+        else if (end > s.segEnd) s.copy(segEnd = end)
+        else s
+      merged.copy(nIntervals = merged.nIntervals + 1, lastS = start,
+        lastE = end)
+    } else s
   }
+
+  private def snapshot(key: String,
+                       s: CoverageState): Option[CoverageSnapshot] =
+    if (s.nIntervals == 0L) None
+    else {
+      val covered = s.closedSec + (s.segEnd - s.segStart)
+      val merged = s.nClosed + 1
+      Some(CoverageSnapshot(key, s.nIntervals, merged, covered,
+        math.round(merged.toDouble / s.nIntervals * 10000) / 10000.0))
+    }
 
   def run(readings: Dataset[SensorReading], lenSec: Int = 1800,
-          watermarkDelay: String = "10 minutes"): Dataset[CoverageSnapshot] = {
-    import readings.sparkSession.implicits._
-    readings
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .transformWithState(new CoverageProcessor(lenSec),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+          watermarkDelay: String = "10 minutes"): Dataset[CoverageSnapshot] =
+    ReadingFold.run(readings, watermarkDelay,
+      new ReadingFold[Unit, CoverageState, CoverageSnapshot]("cov",
+        CoverageState(Long.MinValue, Long.MinValue, 0L, 0L, 0L,
+          Long.MinValue, Long.MinValue),
+        ReadingFold.bySeconds, ReadingFold.everyKey,
+        (_, _, s, r, _) => step(s, r, lenSec),
+        (key, _, s) => snapshot(key, s)))
 }

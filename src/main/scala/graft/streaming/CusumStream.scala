@@ -2,9 +2,7 @@ package graft.streaming
 
 import java.math.{BigDecimal => JBD, RoundingMode}
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Per-series training reference handed to the monitor: the batch q139
   * plan's (n_train, μ, σ) from [[graft.ops.TimeSeries.cusumTrainStats]] —
@@ -49,10 +47,6 @@ case class CusumState(nDays: Long, cs: String, runmin: String,
   */
 object CusumStream {
 
-  private def snap6Micros(x: Double): Long =
-    JBD.valueOf(x).setScale(6, RoundingMode.HALF_UP)
-      .movePointRight(6).longValueExact()
-
   /** Fold one closed day's mean through the batch recursion. */
   private[graft] def foldDay(st: CusumState, day: Long, m: Double,
                              p: CusumParams, slack: Double): CusumState = {
@@ -69,71 +63,29 @@ object CusumStream {
       runmin = runmin.toPlainString, excMax = em, peakDay = pd)
   }
 
-  class CusumProcessor(params: Map[String, CusumParams], slack: Double,
-                       threshold: Double)
-      extends StatefulProcessor[String, SensorReading, CusumSnapshot] {
-    @transient private var st: ValueState[CusumState] = _
+  private val days = new DailyMean[CusumState](
+    s => (s.curDay, s.svMicros, s.cnt),
+    (s, day, sv, n) => s.copy(curDay = day, svMicros = sv, cnt = n))
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState("cusum", Encoders.product[CusumState],
-        TTLConfig.NONE)
+  /** End-of-batch view: fold the open day as if final, report q139's
+    * peak row for this series.
+    */
+  private def snapshot(key: String, s: CusumState, p: CusumParams,
+                       slack: Double, threshold: Double): Option[CusumSnapshot] =
+    days.closed(s)(foldDay(_, _, _, p, slack)).map { fin =>
+      CusumSnapshot(key, p.nTrain, fin.peakDay, Exact.r4(fin.excMax),
+        fin.excMax > threshold)
     }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[SensorReading],
-        timerValues: TimerValues): Iterator[CusumSnapshot] = {
-      val p = params.get(key)
-      if (p.isEmpty) { rows.foreach(_ => ()); return Iterator.empty }
-      var s = if (st.exists()) st.get()
-        else CusumState(0L, "0", "0", Double.NegativeInfinity, Long.MinValue,
-          Long.MinValue, 0L, 0L)
-      rows.toArray.sortBy(r => (StreamTime.micros(r.ts), r.event_id)).foreach { r =>
-        val day = math.floorDiv(StreamTime.micros(r.ts), 86400L * 1000000L)
-        if (s.curDay == Long.MinValue) s = s.copy(curDay = day)
-        if (day > s.curDay) {
-          // rollover: the held day is complete — fold its mean
-          s = foldDay(s, s.curDay, openDayMean(s), p.get, slack)
-            .copy(curDay = day, svMicros = 0L, cnt = 0L)
-        }
-        // readings for a PAST day after rollover are dropped (watermark
-        // contract: the day was already finalized)
-        if (day == s.curDay) {
-          s = s.copy(svMicros = s.svMicros + snap6Micros(r.value),
-            cnt = s.cnt + 1)
-        }
-      }
-      st.update(s)
-      snapshot(key, s, p.get)
-    }
-
-    private def openDayMean(s: CusumState): Double =
-      s.svMicros.toDouble / 1e6 / s.cnt
-
-    /** End-of-batch view: fold the open day as if final, report q139's
-      * peak row for this series.
-      */
-    private def snapshot(key: String, s: CusumState,
-                         p: CusumParams): Iterator[CusumSnapshot] = {
-      if (s.cnt == 0) return Iterator.empty
-      val fin = foldDay(s, s.curDay, openDayMean(s), p, slack)
-      // batch r4 = round(x*10000)/10000 via Spark ROUND (HALF_UP)
-      val peak = JBD.valueOf(fin.excMax * 10000)
-        .setScale(0, RoundingMode.HALF_UP).doubleValue() / 10000
-      Iterator.single(CusumSnapshot(key, p.nTrain, fin.peakDay, peak,
-        fin.excMax > threshold))
-    }
-  }
 
   def run(readings: Dataset[SensorReading],
           params: Map[String, CusumParams],
           slack: Double = 0.5, threshold: Double = 5.0,
-          watermarkDelay: String = "10 minutes"): Dataset[CusumSnapshot] = {
-    import readings.sparkSession.implicits._
-    readings
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .transformWithState(new CusumProcessor(params, slack, threshold),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+          watermarkDelay: String = "10 minutes"): Dataset[CusumSnapshot] =
+    ReadingFold.run(readings, watermarkDelay,
+      new ReadingFold[CusumParams, CusumState, CusumSnapshot]("cusum",
+        CusumState(0L, "0", "0", Double.NegativeInfinity, Long.MinValue,
+          Long.MinValue, 0L, 0L),
+        ReadingFold.byMicros, params.get,
+        (_, p, s, r, _) => days.add(s, r)(foldDay(_, _, _, p, slack)),
+        (key, p, s) => snapshot(key, s, p, slack, threshold)))
 }

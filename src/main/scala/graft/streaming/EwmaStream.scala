@@ -2,9 +2,7 @@ package graft.streaming
 
 import java.math.{BigDecimal => JBD, RoundingMode}
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** One smoothed point per fully-lagged reading — the same (key, event_id,
   * rn, ewma) the q110 batch query reports.
@@ -53,50 +51,27 @@ object EwmaStream {
       acc = acc.add(x.multiply(weights(k).setScale(lags)))
       k += 1
     }
-    val raw = acc.doubleValue / norm
-    JBD.valueOf(raw * 10000)
-      .setScale(0, RoundingMode.HALF_UP).doubleValue() / 10000
+    Exact.r4(acc.doubleValue / norm)
   }
 
-  class EwmaProcessor
-      extends StatefulProcessor[String, SensorReading, EwmaPoint] {
-    @transient private var st: ValueState[EwmaState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState("ewma", Encoders.product[EwmaState],
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[SensorReading],
-        timerValues: TimerValues): Iterator[EwmaPoint] = {
-      var s = if (st.exists()) st.get() else EwmaState(Nil, Nil, Nil, 1L)
-      val out = Seq.newBuilder[EwmaPoint]
-      rows.toArray.sortBy(r => (StreamTime.micros(r.ts), r.event_id))
-        .foreach { r =>
-          val e = StreamTime.micros(r.ts)
-          if (s.e.isEmpty || e > s.e.last
-            || (e == s.e.last && r.event_id > s.id.last)) {
-            if (s.e.size == lags)
-              out += EwmaPoint(key, r.event_id, s.rn, ewmaOf(r.value, s.v))
-            s = EwmaState((s.e :+ e).takeRight(lags),
-              (s.id :+ r.event_id).takeRight(lags),
-              (s.v :+ r.value).takeRight(lags), s.rn + 1)
-          }
-        }
-      st.update(s)
-      out.result().iterator
-    }
+  private def step(key: String, s: EwmaState, r: SensorReading,
+                   emit: EwmaPoint => Unit): EwmaState = {
+    val e = StreamTime.micros(r.ts)
+    if (s.e.isEmpty || e > s.e.last
+      || (e == s.e.last && r.event_id > s.id.last)) {
+      if (s.e.size == lags)
+        emit(EwmaPoint(key, r.event_id, s.rn, ewmaOf(r.value, s.v)))
+      EwmaState((s.e :+ e).takeRight(lags),
+        (s.id :+ r.event_id).takeRight(lags),
+        (s.v :+ r.value).takeRight(lags), s.rn + 1)
+    } else s
   }
 
   def run(readings: Dataset[SensorReading],
-          watermarkDelay: String = "10 minutes"): Dataset[EwmaPoint] = {
-    import readings.sparkSession.implicits._
-    readings
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .transformWithState(new EwmaProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+          watermarkDelay: String = "10 minutes"): Dataset[EwmaPoint] =
+    ReadingFold.run(readings, watermarkDelay,
+      new ReadingFold[Unit, EwmaState, EwmaPoint]("ewma",
+        EwmaState(Nil, Nil, Nil, 1L), ReadingFold.byMicros,
+        ReadingFold.everyKey,
+        (key, _, s, r, emit) => step(key, s, r, emit)))
 }

@@ -1,10 +1,6 @@
 package graft.streaming
 
-import java.math.{BigDecimal => JBD, RoundingMode}
-
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** One running extremal-index verdict per key per batch — q368's columns. */
 case class ExtremalSnapshot(event_type: String, n_exceed: Long,
@@ -36,10 +32,6 @@ case class ExtremalState(lastExcDay: Long, nExceed: Long, nClusters: Long,
   */
 object ExtremalStream {
 
-  private def snap6Micros(x: Double): Long =
-    JBD.valueOf(x).setScale(6, RoundingMode.HALF_UP)
-      .movePointRight(6).longValueExact()
-
   /** Fold one closed day's mean through the batch declustering rule. */
   private[graft] def foldDay(st: ExtremalState, day: Long, m: Double,
                              thr: Double, sep: Int): ExtremalState = {
@@ -54,70 +46,29 @@ object ExtremalStream {
     }
   }
 
-  class ExtremalProcessor(thresholds: Map[String, Double], sep: Int)
-      extends StatefulProcessor[String, SensorReading, ExtremalSnapshot] {
-    @transient private var st: ValueState[ExtremalState] = _
+  private val days = new DailyMean[ExtremalState](
+    s => (s.curDay, s.svMicros, s.cnt),
+    (s, day, sv, n) => s.copy(curDay = day, svMicros = sv, cnt = n))
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState("extremal",
-        Encoders.product[ExtremalState], TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[SensorReading],
-        timerValues: TimerValues): Iterator[ExtremalSnapshot] = {
-      val thr = thresholds.get(key)
-      if (thr.isEmpty) { rows.foreach(_ => ()); return Iterator.empty }
-      var s = if (st.exists()) st.get()
-        else ExtremalState(Long.MinValue, 0L, 0L, 0L, 0L, Long.MinValue,
-          0L, 0L)
-      rows.toArray.sortBy(r => (StreamTime.micros(r.ts), r.event_id)).foreach { r =>
-        val day = math.floorDiv(StreamTime.micros(r.ts), 86400L * 1000000L)
-        if (s.curDay == Long.MinValue) s = s.copy(curDay = day)
-        if (day > s.curDay) {
-          s = foldDay(s, s.curDay, openDayMean(s), thr.get, sep)
-            .copy(curDay = day, svMicros = 0L, cnt = 0L)
-        }
-        // past-day rows after rollover are dropped (watermark contract)
-        if (day == s.curDay) {
-          s = s.copy(svMicros = s.svMicros + snap6Micros(r.value),
-            cnt = s.cnt + 1)
-        }
+  /** End-of-batch view: fold the open day as if final, report q368's
+    * row for this series (nothing until the first exceedance).
+    */
+  private def snapshot(key: String, s: ExtremalState, thr: Double,
+                       sep: Int): Option[ExtremalSnapshot] =
+    days.closed(s)(foldDay(_, _, _, thr, sep)).filter(_.nExceed > 0)
+      .map { fin =>
+        ExtremalSnapshot(key, fin.nExceed, fin.nClusters, fin.maxRun,
+          Exact.r4(fin.nClusters.toDouble / fin.nExceed),
+          Exact.r4(fin.nExceed.toDouble / fin.nClusters))
       }
-      st.update(s)
-      snapshot(key, s, thr.get)
-    }
-
-    private def openDayMean(s: ExtremalState): Double =
-      s.svMicros.toDouble / 1e6 / s.cnt
-
-    /** End-of-batch view: fold the open day as if final, report q368's
-      * row for this series (nothing until the first exceedance).
-      */
-    private def snapshot(key: String, s: ExtremalState,
-                         thr: Double): Iterator[ExtremalSnapshot] = {
-      if (s.cnt == 0) return Iterator.empty
-      val fin = foldDay(s, s.curDay, openDayMean(s), thr, sep)
-      if (fin.nExceed == 0) return Iterator.empty
-      // batch r4 = round(x*10000)/10000 via Spark ROUND (HALF_UP)
-      def r4(x: Double) = JBD.valueOf(x * 10000)
-        .setScale(0, RoundingMode.HALF_UP).doubleValue() / 10000
-      Iterator.single(ExtremalSnapshot(key, fin.nExceed, fin.nClusters,
-        fin.maxRun,
-        r4(fin.nClusters.toDouble / fin.nExceed),
-        r4(fin.nExceed.toDouble / fin.nClusters)))
-    }
-  }
 
   def run(readings: Dataset[SensorReading],
           thresholds: Map[String, Double], sep: Int = 2,
-          watermarkDelay: String = "10 minutes"): Dataset[ExtremalSnapshot] = {
-    import readings.sparkSession.implicits._
-    readings
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .transformWithState(new ExtremalProcessor(thresholds, sep),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+          watermarkDelay: String = "10 minutes"): Dataset[ExtremalSnapshot] =
+    ReadingFold.run(readings, watermarkDelay,
+      new ReadingFold[Double, ExtremalState, ExtremalSnapshot]("extremal",
+        ExtremalState(Long.MinValue, 0L, 0L, 0L, 0L, Long.MinValue, 0L, 0L),
+        ReadingFold.byMicros, thresholds.get,
+        (_, thr, s, r, _) => days.add(s, r)(foldDay(_, _, _, thr, sep)),
+        (key, thr, s) => snapshot(key, s, thr, sep)))
 }

@@ -1,10 +1,6 @@
 package graft.streaming
 
-import java.math.{BigDecimal => JBD, RoundingMode}
-
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** Per-key census snapshot — q415's batch census columns, keyed by the
   * stream's grouping key. The stream groups by whatever column the caller
@@ -64,109 +60,79 @@ object HampelStream {
     (dev > fence, if (fence > 0) Some(dev / fence) else None)
   }
 
-  private def emptyState = HampelState(Vector.empty, Vector.empty,
-    0L, 0L, 0L, 0L, 0L, 0.0, hasWorst = false, Long.MinValue, Long.MinValue)
-
-  class HampelProcessor
-      extends StatefulProcessor[String, SensorReading, HampelSnapshot] {
-    @transient private var st: ValueState[HampelState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState("hampel", Encoders.product[HampelState],
-        TTLConfig.NONE)
-    }
-
-    /** Finalize every row whose 5 successors exist, advancing the ring. */
-    private def drain(s0: HampelState): HampelState = {
-      var s = s0
-      val lastIdx = s.firstIdx + s.bufIdx.length - 1
-      while (s.nextFinal + 5 <= lastIdx) {
-        val i = s.nextFinal
-        val lo = math.max(s.firstIdx, i - 5)
-        val loOff = (lo - s.firstIdx).toInt
-        val hiOff = (i + 5 - s.firstIdx).toInt
-        val win = s.bufVal.slice(loOff, hiOff + 1).toArray
-        val x = s.bufVal((i - s.firstIdx).toInt)
-        val (fl, ratio) = verdict(win, x)
-        val (w, hw) = ratio match {
-          case Some(r) if !s.hasWorst || r > s.worst => (r, true)
-          case _ => (s.worst, s.hasWorst)
-        }
-        s = s.copy(nextFinal = i + 1, nFinal = s.nFinal + 1,
-          nFlagged = s.nFlagged + (if (fl) 1L else 0L), worst = w,
-          hasWorst = hw)
-        // rows before nextFinal−5 are out of every future window
-        val keepFrom = s.nextFinal - 5
-        if (keepFrom > s.firstIdx) {
-          val drop = (keepFrom - s.firstIdx).toInt
-          s = s.copy(bufIdx = s.bufIdx.drop(drop),
-            bufVal = s.bufVal.drop(drop), firstIdx = keepFrom)
-        }
+  /** Finalize every row whose 5 successors exist, advancing the ring. */
+  private def drain(s0: HampelState): HampelState = {
+    var s = s0
+    val lastIdx = s.firstIdx + s.bufIdx.length - 1
+    while (s.nextFinal + 5 <= lastIdx) {
+      val i = s.nextFinal
+      val lo = math.max(s.firstIdx, i - 5)
+      val loOff = (lo - s.firstIdx).toInt
+      val hiOff = (i + 5 - s.firstIdx).toInt
+      val win = s.bufVal.slice(loOff, hiOff + 1).toArray
+      val x = s.bufVal((i - s.firstIdx).toInt)
+      val (fl, ratio) = verdict(win, x)
+      val (w, hw) = ratio match {
+        case Some(r) if !s.hasWorst || r > s.worst => (r, true)
+        case _ => (s.worst, s.hasWorst)
       }
-      s
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[SensorReading],
-        timerValues: TimerValues): Iterator[HampelSnapshot] = {
-      var s = if (st.exists()) st.get() else emptyState
-      rows.toArray.sortBy(r => (StreamTime.micros(r.ts), r.event_id))
-        .foreach { r =>
-          val t = StreamTime.micros(r.ts)
-          // arrival-order contract: a straggler that sorts before an
-          // already-buffered reading is dropped, like CusumStream's
-          // past-day drop
-          if (t > s.lastTs || (t == s.lastTs && r.event_id > s.lastId)) {
-            s = s.copy(bufIdx = s.bufIdx :+ (s.firstIdx + s.bufIdx.length),
-              bufVal = s.bufVal :+ r.value, nSeen = s.nSeen + 1,
-              lastTs = t, lastId = r.event_id)
-            s = drain(s)
-          }
-        }
-      st.update(s)
-      snapshot(key, s)
-    }
-
-    /** End-of-batch view: finalize the open tail with truncated windows —
-      * the batch semantics at series end — WITHOUT mutating state.
-      */
-    private def snapshot(key: String, s: HampelState)
-        : Iterator[HampelSnapshot] = {
-      if (s.nSeen == 0) return Iterator.empty
-      var nFlag = s.nFlagged
-      var worst = s.worst
-      var hasW = s.hasWorst
-      val lastIdx = s.firstIdx + s.bufIdx.length - 1
-      var i = s.nextFinal
-      while (i <= lastIdx) {
-        val lo = math.max(s.firstIdx, i - 5)
-        val loOff = (lo - s.firstIdx).toInt
-        val win = s.bufVal.slice(loOff, s.bufVal.length).toArray
-        // truncated: everything from lo to the current series end
-        val x = s.bufVal((i - s.firstIdx).toInt)
-        val (fl, ratio) = verdict(win, x)
-        if (fl) nFlag += 1
-        ratio.foreach { r => if (!hasW || r > worst) { worst = r; hasW = true } }
-        i += 1
+      s = s.copy(nextFinal = i + 1, nFinal = s.nFinal + 1,
+        nFlagged = s.nFlagged + (if (fl) 1L else 0L), worst = w,
+        hasWorst = hw)
+      // rows before nextFinal−5 are out of every future window
+      val keepFrom = s.nextFinal - 5
+      if (keepFrom > s.firstIdx) {
+        val drop = (keepFrom - s.firstIdx).toInt
+        s = s.copy(bufIdx = s.bufIdx.drop(drop),
+          bufVal = s.bufVal.drop(drop), firstIdx = keepFrom)
       }
-      val flagRate = JBD.valueOf(nFlag.toDouble / s.nSeen * 1000000)
-        .setScale(0, RoundingMode.HALF_UP).doubleValue() / 1000000.0
-      val worstOut = if (hasW)
-        Some(JBD.valueOf(worst * 10000)
-          .setScale(0, RoundingMode.HALF_UP).doubleValue() / 10000.0)
-      else None
-      Iterator.single(HampelSnapshot(key, s.nSeen, nFlag, flagRate, worstOut))
     }
+    s
+  }
+
+  private def step(s: HampelState, r: SensorReading): HampelState = {
+    val t = StreamTime.micros(r.ts)
+    // arrival-order contract: a straggler that sorts before an
+    // already-buffered reading is dropped, like CusumStream's past-day drop
+    if (t > s.lastTs || (t == s.lastTs && r.event_id > s.lastId))
+      drain(s.copy(bufIdx = s.bufIdx :+ (s.firstIdx + s.bufIdx.length),
+        bufVal = s.bufVal :+ r.value, nSeen = s.nSeen + 1,
+        lastTs = t, lastId = r.event_id))
+    else s
+  }
+
+  /** End-of-batch view: finalize the open tail with truncated windows —
+    * the batch semantics at series end — WITHOUT mutating state.
+    */
+  private def snapshot(key: String, s: HampelState): Option[HampelSnapshot] = {
+    if (s.nSeen == 0) return None
+    var nFlag = s.nFlagged
+    var worst = s.worst
+    var hasW = s.hasWorst
+    val lastIdx = s.firstIdx + s.bufIdx.length - 1
+    var i = s.nextFinal
+    while (i <= lastIdx) {
+      val lo = math.max(s.firstIdx, i - 5)
+      val loOff = (lo - s.firstIdx).toInt
+      val win = s.bufVal.slice(loOff, s.bufVal.length).toArray
+      // truncated: everything from lo to the current series end
+      val x = s.bufVal((i - s.firstIdx).toInt)
+      val (fl, ratio) = verdict(win, x)
+      if (fl) nFlag += 1
+      ratio.foreach { r => if (!hasW || r > worst) { worst = r; hasW = true } }
+      i += 1
+    }
+    Some(HampelSnapshot(key, s.nSeen, nFlag,
+      Exact.r6(nFlag.toDouble / s.nSeen),
+      if (hasW) Some(Exact.r4(worst)) else None))
   }
 
   def run(readings: Dataset[SensorReading],
-          watermarkDelay: String = "10 minutes"): Dataset[HampelSnapshot] = {
-    import readings.sparkSession.implicits._
-    readings
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .transformWithState(new HampelProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+          watermarkDelay: String = "10 minutes"): Dataset[HampelSnapshot] =
+    ReadingFold.run(readings, watermarkDelay,
+      new ReadingFold[Unit, HampelState, HampelSnapshot]("hampel",
+        HampelState(Vector.empty, Vector.empty, 0L, 0L, 0L, 0L, 0L, 0.0,
+          hasWorst = false, Long.MinValue, Long.MinValue),
+        ReadingFold.byMicros, ReadingFold.everyKey,
+        (_, _, s, r, _) => step(s, r), (key, _, s) => snapshot(key, s)))
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
+
+import Exact.{r6, snap12}
 
 /** One Holt snapshot per key per batch — the same columns the q251 batch
   * query reports, so the two are directly comparable.
@@ -33,15 +33,6 @@ case class HoltState(nClosed: Long, x1: Double, l: Double, b: Double,
   */
 object HoltStream {
 
-  private[streaming] def snap12(x: Double): Double =
-    java.math.BigDecimal.valueOf(x * 1e12)
-      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue() / 1e12
-
-  private def snap6Micros(x: Double): Long =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP)
-      .movePointRight(6).longValueExact()
-
   /** Fold one closed day's mean into the Holt state (q251's recursion). */
   private[graft] def foldDay(s: HoltState, m: Double): HoltState = {
     if (s.nClosed == 0) s.copy(nClosed = 1, x1 = m)
@@ -54,66 +45,29 @@ object HoltStream {
     }
   }
 
-  class HoltProcessor
-      extends StatefulProcessor[String, SensorReading, HoltSnapshot] {
-    @transient private var st: ValueState[HoltState] = _
+  private val days = new DailyMean[HoltState](
+    s => (s.curDay, s.svMicros, s.cnt),
+    (s, day, sv, n) => s.copy(curDay = day, svMicros = sv, cnt = n))
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState("holt", Encoders.product[HoltState],
-        TTLConfig.NONE)
-    }
+  private def foldMean(s: HoltState, day: Long, m: Double): HoltState =
+    foldDay(s, snap12(m))
 
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[SensorReading],
-        timerValues: TimerValues): Iterator[HoltSnapshot] = {
-      var s = if (st.exists()) st.get()
-        else HoltState(0L, 0.0, 0.0, 0.0, 0.0, Long.MinValue, 0L, 0L)
-      rows.toArray.sortBy(r => (StreamTime.micros(r.ts), r.event_id)).foreach { r =>
-        val day = math.floorDiv(StreamTime.micros(r.ts), 86400L * 1000000L)
-        if (s.curDay == Long.MinValue) s = s.copy(curDay = day)
-        if (day > s.curDay) {
-          // rollover: the held day is complete — fold its mean
-          s = foldDay(s, openDayMean(s)).copy(curDay = day,
-            svMicros = 0L, cnt = 0L)
-        }
-        // readings for a PAST day after rollover are dropped (watermark
-        // bounds this lateness); current-day readings accumulate
-        if (day == s.curDay) {
-          s = s.copy(svMicros = s.svMicros + snap6Micros(r.value),
-            cnt = s.cnt + 1)
-        }
-      }
-      st.update(s)
-      snapshot(key, s)
-    }
-
-    private def openDayMean(s: HoltState): Double =
-      snap12(s.svMicros.toDouble / 1e6 / s.cnt)
-
-    /** End-of-batch view: fold the open day as if final, report q251's
-      * columns. Emits nothing until two days of data exist.
-      */
-    private def snapshot(key: String, s: HoltState): Iterator[HoltSnapshot] = {
-      if (s.cnt == 0) return Iterator.empty
-      val fin = foldDay(s, openDayMean(s))
-      if (fin.nClosed < 2) return Iterator.empty
-      def r6(x: Double) =
-        java.math.BigDecimal.valueOf(x * 1000000)
-          .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue() / 1000000.0
+  /** End-of-batch view: fold the open day as if final, report q251's
+    * columns. Emits nothing until two days of data exist.
+    */
+  private def snapshot(key: String, s: HoltState): Option[HoltSnapshot] =
+    days.closed(s)(foldMean).filter(_.nClosed >= 2).map { fin =>
       val mae = if (fin.nClosed > 2) fin.sae / (fin.nClosed - 2) else 0.0
-      Iterator.single(HoltSnapshot(key, fin.nClosed, r6(fin.l), r6(fin.b),
-        r6(fin.l + 7.0 * fin.b), r6(mae)))
+      HoltSnapshot(key, fin.nClosed, r6(fin.l), r6(fin.b),
+        r6(fin.l + 7.0 * fin.b), r6(mae))
     }
-  }
 
   def run(readings: Dataset[SensorReading],
-          watermarkDelay: String = "10 minutes"): Dataset[HoltSnapshot] = {
-    import readings.sparkSession.implicits._
-    readings
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .transformWithState(new HoltProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+          watermarkDelay: String = "10 minutes"): Dataset[HoltSnapshot] =
+    ReadingFold.run(readings, watermarkDelay,
+      new ReadingFold[Unit, HoltState, HoltSnapshot]("holt",
+        HoltState(0L, 0.0, 0.0, 0.0, 0.0, Long.MinValue, 0L, 0L),
+        ReadingFold.byMicros, ReadingFold.everyKey,
+        (_, _, s, r, _) => days.add(s, r)(foldMean),
+        (key, _, s) => snapshot(key, s)))
 }

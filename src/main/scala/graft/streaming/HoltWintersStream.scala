@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
+
+import Exact.{r6, snap12}
 
 /** One Holt-Winters snapshot per key per batch — the same columns the q273
   * batch query reports, so the two are directly comparable.
@@ -41,13 +41,6 @@ case class HwState(nClosed: Long, init: Seq[Double], l: Double, b: Double,
   */
 object HoltWintersStream {
 
-  private def snap12(x: Double): Double = HoltStream.snap12(x)
-
-  private def snap6Micros(x: Double): Long =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP)
-      .movePointRight(6).longValueExact()
-
   /** Fold one closed day's mean into the state: collect until 14 days,
     * initialize on the 14th, then walk q273's snapped recursion.
     */
@@ -75,64 +68,30 @@ object HoltWintersStream {
     }
   }
 
-  class HwProcessor
-      extends StatefulProcessor[String, SensorReading, HwSnapshot] {
-    @transient private var st: ValueState[HwState] = _
+  private val days = new DailyMean[HwState](
+    s => (s.curDay, s.svMicros, s.cnt),
+    (s, day, sv, n) => s.copy(curDay = day, svMicros = sv, cnt = n))
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState("hw", Encoders.product[HwState],
-        TTLConfig.NONE)
-    }
+  private def foldMean(s: HwState, day: Long, m: Double): HwState =
+    foldDay(s, snap12(m))
 
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[SensorReading],
-        timerValues: TimerValues): Iterator[HwSnapshot] = {
-      var s = if (st.exists()) st.get()
-        else HwState(0L, Nil, 0.0, 0.0, Nil, 0.0, Long.MinValue, 0L, 0L)
-      rows.toArray.sortBy(r => (StreamTime.micros(r.ts), r.event_id)).foreach { r =>
-        val day = math.floorDiv(StreamTime.micros(r.ts), 86400L * 1000000L)
-        if (s.curDay == Long.MinValue) s = s.copy(curDay = day)
-        if (day > s.curDay) {
-          s = foldDay(s, openDayMean(s)).copy(curDay = day,
-            svMicros = 0L, cnt = 0L)
-        }
-        if (day == s.curDay) {
-          s = s.copy(svMicros = s.svMicros + snap6Micros(r.value),
-            cnt = s.cnt + 1)
-        }
-      }
-      st.update(s)
-      snapshot(key, s)
-    }
-
-    private def openDayMean(s: HwState): Double =
-      snap12(s.svMicros.toDouble / 1e6 / s.cnt)
-
-    /** End-of-batch view: fold the open day as if final, report q273's
-      * columns. Emits nothing until 14 days of data exist.
-      */
-    private def snapshot(key: String, s: HwState): Iterator[HwSnapshot] = {
-      if (s.cnt == 0) return Iterator.empty
-      val fin = foldDay(s, openDayMean(s))
-      if (fin.nClosed < 14) return Iterator.empty
-      def r6(x: Double) =
-        java.math.BigDecimal.valueOf(x * 1000000)
-          .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue() / 1000000.0
+  /** End-of-batch view: fold the open day as if final, report q273's
+    * columns. Emits nothing until 14 days of data exist.
+    */
+  private def snapshot(key: String, s: HwState): Option[HwSnapshot] =
+    days.closed(s)(foldMean).filter(_.nClosed >= 14).map { fin =>
       val mae = if (fin.nClosed > 14) fin.sae / (fin.nClosed - 14) else 0.0
       val slot = (fin.nClosed % 7).toInt
-      Iterator.single(HwSnapshot(key, fin.nClosed, r6(fin.l), r6(fin.b),
-        r6(fin.l + fin.b + fin.s(slot)), r6(fin.s.max - fin.s.min), r6(mae)))
+      HwSnapshot(key, fin.nClosed, r6(fin.l), r6(fin.b),
+        r6(fin.l + fin.b + fin.s(slot)), r6(fin.s.max - fin.s.min), r6(mae))
     }
-  }
 
   def run(readings: Dataset[SensorReading],
-          watermarkDelay: String = "10 minutes"): Dataset[HwSnapshot] = {
-    import readings.sparkSession.implicits._
-    readings
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .transformWithState(new HwProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+          watermarkDelay: String = "10 minutes"): Dataset[HwSnapshot] =
+    ReadingFold.run(readings, watermarkDelay,
+      new ReadingFold[Unit, HwState, HwSnapshot]("hw",
+        HwState(0L, Nil, 0.0, 0.0, Nil, 0.0, Long.MinValue, 0L, 0L),
+        ReadingFold.byMicros, ReadingFold.everyKey,
+        (_, _, s, r, _) => days.add(s, r)(foldMean),
+        (key, _, s) => snapshot(key, s)))
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
+
+import Exact.{r6, snap12}
 
 /** One Kalman snapshot per key per batch — the same columns the q287 batch
   * query reports, so the two are directly comparable.
@@ -29,13 +29,6 @@ case class KalmanState(nClosed: Long, x: Double, p: Double, k: Double,
   */
 object KalmanStream {
 
-  private def snap12(x: Double): Double = HoltStream.snap12(x)
-
-  private def snap6Micros(x: Double): Long =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP)
-      .movePointRight(6).longValueExact()
-
   /** Fold one closed day's mean into the filter (q287's recursion). */
   private[graft] def foldDay(s: KalmanState, m: Double): KalmanState = {
     if (s.nClosed == 0) s.copy(nClosed = 1, x = m, p = 1.0, k = 0.0)
@@ -49,63 +42,28 @@ object KalmanStream {
     }
   }
 
-  class KalmanProcessor
-      extends StatefulProcessor[String, SensorReading, KalmanSnapshot] {
-    @transient private var st: ValueState[KalmanState] = _
+  private val days = new DailyMean[KalmanState](
+    s => (s.curDay, s.svMicros, s.cnt),
+    (s, day, sv, n) => s.copy(curDay = day, svMicros = sv, cnt = n))
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState("kalman", Encoders.product[KalmanState],
-        TTLConfig.NONE)
+  private def foldMean(s: KalmanState, day: Long, m: Double): KalmanState =
+    foldDay(s, snap12(m))
+
+  /** End-of-batch view: fold the open day as if final, report q287's
+    * columns. Emits nothing until two days of data exist.
+    */
+  private def snapshot(key: String, s: KalmanState): Option[KalmanSnapshot] =
+    days.closed(s)(foldMean).filter(_.nClosed >= 2).map { fin =>
+      KalmanSnapshot(key, fin.nClosed, r6(fin.x), r6(fin.p), r6(fin.k),
+        r6(fin.sae / (fin.nClosed - 1)))
     }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[SensorReading],
-        timerValues: TimerValues): Iterator[KalmanSnapshot] = {
-      var s = if (st.exists()) st.get()
-        else KalmanState(0L, 0.0, 0.0, 0.0, 0.0, Long.MinValue, 0L, 0L)
-      rows.toArray.sortBy(r => (StreamTime.micros(r.ts), r.event_id)).foreach { r =>
-        val day = math.floorDiv(StreamTime.micros(r.ts), 86400L * 1000000L)
-        if (s.curDay == Long.MinValue) s = s.copy(curDay = day)
-        if (day > s.curDay) {
-          s = foldDay(s, openDayMean(s)).copy(curDay = day,
-            svMicros = 0L, cnt = 0L)
-        }
-        if (day == s.curDay) {
-          s = s.copy(svMicros = s.svMicros + snap6Micros(r.value),
-            cnt = s.cnt + 1)
-        }
-      }
-      st.update(s)
-      snapshot(key, s)
-    }
-
-    private def openDayMean(s: KalmanState): Double =
-      snap12(s.svMicros.toDouble / 1e6 / s.cnt)
-
-    /** End-of-batch view: fold the open day as if final, report q287's
-      * columns. Emits nothing until two days of data exist.
-      */
-    private def snapshot(key: String,
-                         s: KalmanState): Iterator[KalmanSnapshot] = {
-      if (s.cnt == 0) return Iterator.empty
-      val fin = foldDay(s, openDayMean(s))
-      if (fin.nClosed < 2) return Iterator.empty
-      def r6(x: Double) =
-        java.math.BigDecimal.valueOf(x * 1000000)
-          .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue() / 1000000.0
-      Iterator.single(KalmanSnapshot(key, fin.nClosed, r6(fin.x), r6(fin.p),
-        r6(fin.k), r6(fin.sae / (fin.nClosed - 1))))
-    }
-  }
 
   def run(readings: Dataset[SensorReading],
-          watermarkDelay: String = "10 minutes"): Dataset[KalmanSnapshot] = {
-    import readings.sparkSession.implicits._
-    readings
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .transformWithState(new KalmanProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+          watermarkDelay: String = "10 minutes"): Dataset[KalmanSnapshot] =
+    ReadingFold.run(readings, watermarkDelay,
+      new ReadingFold[Unit, KalmanState, KalmanSnapshot]("kalman",
+        KalmanState(0L, 0.0, 0.0, 0.0, 0.0, Long.MinValue, 0L, 0L),
+        ReadingFold.byMicros, ReadingFold.everyKey,
+        (_, _, s, r, _) => days.add(s, r)(foldMean),
+        (key, _, s) => snapshot(key, s)))
 }

@@ -16,10 +16,10 @@ case class Peak(event_type: String, peak_e: Long, event_id: Long, value: Double)
   * point n is only known once point n+1 arrives. State per series is the
   * last TWO points (O(1) per key, independent of stream length); each
   * arriving point closes the verdict on its predecessor and rolls the
-  * pair forward. Batches sort by (epoch, event_id) — the same total order
-  * the batch census windows on — and state carries the pair across
-  * micro-batch boundaries, so a peak straddling batches emits exactly
-  * once. Assumes per-key event-time-ordered arrival across batches (the
+  * pair forward. Batches sort by (full-microsecond ts, event_id) — the
+  * same total order the batch census windows on — and state carries the
+  * pair across micro-batch boundaries, so a peak straddling batches emits
+  * exactly once. Assumes per-key event-time-ordered arrival across batches (the
   * usual replay/backfill discipline; out-of-order input inside one batch
   * is handled by the sort).
   */
@@ -32,11 +32,12 @@ object PeakStream {
       .flatMapGroupsWithState[PeakWindow, Peak](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: String, it: Iterator[SeriesPoint], state: GroupState[PeakWindow]) =>
-          val pts = it.toArray.sortBy(p => (p.ts.getTime / 1000, p.event_id))
+          val pts = it.toArray.sortBy(p => (StreamTime.micros(p.ts), p.event_id))
           var st = state.getOption.getOrElse(PeakWindow(0, 0, 0, 0, 0, 0, 0))
           var out = List.empty[Peak]
           pts.foreach { p =>
-            val e = p.ts.getTime / 1000
+            // floored: no watermark here, so pre-1970 points can arrive
+            val e = Math.floorDiv(p.ts.getTime, 1000L)
             if (st.filled == 2 && st.v2 > st.v1 && st.v2 > p.value)
               out ::= Peak(key, st.e2, st.id2, st.v2)
             st =

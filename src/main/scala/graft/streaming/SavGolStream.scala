@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
 
 /** One smoothed point per fully-windowed reading — the same (series,
   * event_id, smooth, resid) the q252 batch filter reports.
@@ -32,57 +30,33 @@ case class SavGolState(e: Seq[Long], id: Seq[Long], v: Seq[Double])
   */
 object SavGolStream {
 
-  private def r6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x * 1000000)
-      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue() / 1000000.0
-
-  class SavGolProcessor
-      extends StatefulProcessor[String, SensorReading, SavGolPoint] {
-    @transient private var st: ValueState[SavGolState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState("ring", Encoders.product[SavGolState],
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[SensorReading],
-        timerValues: TimerValues): Iterator[SavGolPoint] = {
-      var s = if (st.exists()) st.get() else SavGolState(Nil, Nil, Nil)
-      val out = Seq.newBuilder[SavGolPoint]
-      rows.toArray.sortBy(r => (StreamTime.micros(r.ts), r.event_id)).foreach { r =>
-        val e = StreamTime.micros(r.ts)
-        // in-order guard: a reading sorting before the ring's tail arrived
-        // after its window was already finalized — drop it
-        if (s.e.isEmpty || e > s.e.last
-          || (e == s.e.last && r.event_id > s.id.last)) {
-          if (s.e.size == 4) {
-            // the incoming reading completes the window centred on ring
-            // slot 2 (0-based): a=ring(0) b=ring(1) c=ring(2) d=ring(3)
-            // e=incoming — q252's exact expression
-            val sm = (-3.0 * s.v(0) + 12.0 * s.v(1) + 17.0 * s.v(2)
-              + 12.0 * s.v(3) - 3.0 * r.value) / 35.0
-            out += SavGolPoint(key, s.id(2),
-              r6(sm) + 0.0, r6(s.v(2) - sm) + 0.0)
-          }
-          s = SavGolState((s.e :+ e).takeRight(4),
-            (s.id :+ r.event_id).takeRight(4),
-            (s.v :+ r.value).takeRight(4))
-        }
+  private def step(key: String, s: SavGolState, r: SensorReading,
+                   emit: SavGolPoint => Unit): SavGolState = {
+    val e = StreamTime.micros(r.ts)
+    // in-order guard: a reading sorting before the ring's tail arrived
+    // after its window was already finalized — drop it
+    if (s.e.isEmpty || e > s.e.last
+      || (e == s.e.last && r.event_id > s.id.last)) {
+      if (s.e.size == 4) {
+        // the incoming reading completes the window centred on ring
+        // slot 2 (0-based): a=ring(0) b=ring(1) c=ring(2) d=ring(3)
+        // e=incoming — q252's exact expression
+        val sm = (-3.0 * s.v(0) + 12.0 * s.v(1) + 17.0 * s.v(2)
+          + 12.0 * s.v(3) - 3.0 * r.value) / 35.0
+        emit(SavGolPoint(key, s.id(2),
+          Exact.r6(sm) + 0.0, Exact.r6(s.v(2) - sm) + 0.0))
       }
-      st.update(s)
-      out.result().iterator
-    }
+      SavGolState((s.e :+ e).takeRight(4),
+        (s.id :+ r.event_id).takeRight(4),
+        (s.v :+ r.value).takeRight(4))
+    } else s
   }
 
   def run(readings: Dataset[SensorReading],
-          watermarkDelay: String = "10 minutes"): Dataset[SavGolPoint] = {
-    import readings.sparkSession.implicits._
-    readings
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .transformWithState(new SavGolProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+          watermarkDelay: String = "10 minutes"): Dataset[SavGolPoint] =
+    ReadingFold.run(readings, watermarkDelay,
+      new ReadingFold[Unit, SavGolState, SavGolPoint]("ring",
+        SavGolState(Nil, Nil, Nil), ReadingFold.byMicros,
+        ReadingFold.everyKey,
+        (key, _, s, r, emit) => step(key, s, r, emit)))
 }

@@ -1,25 +1,6 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
-  TimeMode, TimerValues, TTLConfig, ValueState}
-
-case class SensorReading(event_type: String, event_id: Long, ts: Timestamp,
-                         value: Double)
-
-/** Shared time helpers for the stateful processors. */
-private[streaming] object StreamTime {
-  /** Full-microsecond epoch of a Timestamp — `getTime` alone truncates to
-    * milliseconds, so two readings a few microseconds apart would tie and
-    * replay-sort by event_id while the batch windows order by the full
-    * timestamp first. Used as the replay/guard key wherever a processor
-    * must walk rows in the batch plan's (ts, event_id) total order.
-    */
-  def micros(t: Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-}
+import org.apache.spark.sql.Dataset
 
 /** One running snapshot per key per batch: the time-weighted average so
   * far, the plain mean, and the coverage span in seconds.
@@ -39,66 +20,44 @@ case class TwaState(pe: Long, pv: Double, areaMicros: Long, spanSec: Long,
   * per-term casts — so after the same rows in any batch slicing the
   * streaming TWA equals the batch TWA exactly (TwaStreamSpec asserts it).
   *
-  * Rows inside a batch are replay-sorted on (epoch, event_id) before
-  * folding, the same total order the batch window uses, making snapshots
-  * deterministic under any micro-batch boundary placement.
+  * Rows inside a batch are replay-sorted on (floored epoch seconds,
+  * event_id) before folding — the batch window's (unix_timestamp(ts),
+  * event_id) order, so two readings in the same second fold in event_id
+  * order, not arrival order — making snapshots deterministic under any
+  * micro-batch boundary placement.
   */
 object TwaStream {
 
-  class TwaProcessor
-      extends StatefulProcessor[String, SensorReading, TwaSnapshot] {
-    @transient private var st: ValueState[TwaState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState("twa", Encoders.product[TwaState],
-        TTLConfig.NONE)
-    }
-
-    private def snap6(x: Double): Long =
-      java.math.BigDecimal.valueOf(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP)
-        .movePointRight(6).longValueExact()
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[SensorReading],
-        timerValues: TimerValues): Iterator[TwaSnapshot] = {
-      val s0 = if (st.exists()) st.get()
-        else TwaState(Long.MinValue, 0.0, 0L, 0L, 0L, 0L)
-      var pe = s0.pe; var pv = s0.pv; var area = s0.areaMicros
-      var span = s0.spanSec; var sv = s0.svMicros; var n = s0.n
-      rows.toArray.sortBy(r => (r.ts.getTime, r.event_id)).foreach { r =>
-        val e = r.ts.getTime / 1000
-        // a row older than the held sample arrived in a LATER micro-batch:
-        // integrating it would produce a negative trapezoid; drop it (the
-        // watermark bounds how much such lateness exists at all)
-        if (pe == Long.MinValue || e >= pe) {
-          if (pe != Long.MinValue) {
-            val dt = (e - pe).toDouble
-            area += snap6(((pv + r.value) / 2.0) * dt)
-            span += e - pe
-          }
-          pe = e; pv = r.value
-          sv += snap6(r.value)
-          n += 1
-        }
-      }
-      st.update(TwaState(pe, pv, area, span, sv, n))
-      if (n == 0) Iterator.empty
-      else Iterator.single(TwaSnapshot(key, n,
-        sv.toDouble / 1e6 / n,
-        if (span > 0) area.toDouble / 1e6 / span else sv.toDouble / 1e6 / n,
-        span))
+  private def step(s: TwaState, r: SensorReading): TwaState = {
+    val e = StreamTime.seconds(r.ts)
+    // a row older than the held sample arrived in a LATER micro-batch:
+    // integrating it would produce a negative trapezoid; drop it (the
+    // watermark bounds how much such lateness exists at all)
+    if (s.pe != Long.MinValue && e < s.pe) s
+    else {
+      val (area, span) =
+        if (s.pe == Long.MinValue) (s.areaMicros, s.spanSec)
+        else (s.areaMicros
+          + Exact.snap6Micros(((s.pv + r.value) / 2.0) * (e - s.pe).toDouble),
+          s.spanSec + (e - s.pe))
+      TwaState(e, r.value, area, span,
+        s.svMicros + Exact.snap6Micros(r.value), s.n + 1)
     }
   }
+
+  private def snapshot(key: String, s: TwaState): Option[TwaSnapshot] =
+    if (s.n == 0) None
+    else Some(TwaSnapshot(key, s.n,
+      s.svMicros.toDouble / 1e6 / s.n,
+      if (s.spanSec > 0) s.areaMicros.toDouble / 1e6 / s.spanSec
+      else s.svMicros.toDouble / 1e6 / s.n,
+      s.spanSec))
 
   def run(readings: Dataset[SensorReading],
-          watermarkDelay: String = "10 minutes"): Dataset[TwaSnapshot] = {
-    import readings.sparkSession.implicits._
-    readings
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.event_type)
-      .transformWithState(new TwaProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
+          watermarkDelay: String = "10 minutes"): Dataset[TwaSnapshot] =
+    ReadingFold.run(readings, watermarkDelay,
+      new ReadingFold[Unit, TwaState, TwaSnapshot]("twa",
+        TwaState(Long.MinValue, 0.0, 0L, 0L, 0L, 0L),
+        ReadingFold.bySeconds, ReadingFold.everyKey,
+        (_, _, s, r, _) => step(s, r), (key, _, s) => snapshot(key, s)))
 }

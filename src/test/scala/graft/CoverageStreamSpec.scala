@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.{CoverageSnapshot, CoverageStream, SensorReading}
 
 /** Streaming interval-union coverage must equal the batch q290 sweep
@@ -26,19 +25,8 @@ class CoverageStreamSpec extends SparkSpec {
       r("b", 10), r("b", 200), r("b", 260), r("b", 1000))
   }
 
-  private def runSliced(slices: Seq[Seq[SensorReading]]): Map[String, CoverageSnapshot] = {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[SensorReading]
-    val name = s"cov_${System.nanoTime()}"
-    val q = CoverageStream.run(mem.toDS(), lenSec = 60).writeStream
-      .format("memory").queryName(name).outputMode("append").start()
-    try {
-      slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
-      spark.table(name).as[CoverageSnapshot].collect()
-        .zipWithIndex.groupBy(_._1.event_type)
-        .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
-    } finally q.stop()
-  }
+  private def runSliced(slices: Seq[Seq[SensorReading]]): Map[String, CoverageSnapshot] =
+    lastPerKey(replay(slices)(CoverageStream.run(_, lenSec = 60)))(_.event_type)
 
   test("streaming coverage matches batch q290 across three slicings") {
     val rs = readings

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.{CusumParams, CusumSnapshot, CusumStream,
   SensorReading}
 
@@ -39,19 +38,8 @@ class CusumStreamSpec extends SparkSpec {
   }
 
   private def runSliced(slices: Seq[Seq[SensorReading]],
-                        params: Map[String, CusumParams]): Map[String, CusumSnapshot] = {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[SensorReading]
-    val name = s"cusum_${System.nanoTime()}"
-    val q = CusumStream.run(mem.toDS(), params).writeStream
-      .format("memory").queryName(name).outputMode("append").start()
-    try {
-      slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
-      spark.table(name).as[CusumSnapshot].collect()
-        .zipWithIndex.groupBy(_._1.event_type)
-        .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
-    } finally q.stop()
-  }
+                        params: Map[String, CusumParams]): Map[String, CusumSnapshot] =
+    lastPerKey(replay(slices)(CusumStream.run(_, params)))(_.event_type)
 
   test("streaming CUSUM matches batch q139 across three slicings") {
     val rs = readings

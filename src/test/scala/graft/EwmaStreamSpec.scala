@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.{EwmaPoint, EwmaStream, SensorReading}
 
 /** Streaming EWMA must equal the batch q110 window EXACTLY after the same
@@ -25,17 +24,8 @@ class EwmaStreamSpec extends SparkSpec {
     (a ++ b).sortBy(x => (x.ts.getTime, x.event_id))
   }
 
-  private def runSliced(slices: Seq[Seq[SensorReading]]): Seq[EwmaPoint] = {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[SensorReading]
-    val name = s"ewma_${System.nanoTime()}"
-    val q = EwmaStream.run(mem.toDS()).writeStream
-      .format("memory").queryName(name).outputMode("append").start()
-    try {
-      slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
-      spark.table(name).as[EwmaPoint].collect().toSeq
-    } finally q.stop()
-  }
+  private def runSliced(slices: Seq[Seq[SensorReading]]): Seq[EwmaPoint] =
+    replay(slices)(EwmaStream.run(_))
 
   test("streaming EWMA matches batch q110 across three slicings") {
     val rs = readings

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.{ExtremalSnapshot, ExtremalStream, SensorReading}
 
@@ -40,19 +39,8 @@ class ExtremalStreamSpec extends SparkSpec {
   }
 
   private def runSliced(slices: Seq[Seq[SensorReading]],
-                        thr: Map[String, Double]): Map[String, ExtremalSnapshot] = {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[SensorReading]
-    val name = s"ext_${System.nanoTime()}"
-    val q = ExtremalStream.run(mem.toDS(), thr).writeStream
-      .format("memory").queryName(name).outputMode("append").start()
-    try {
-      slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
-      spark.table(name).as[ExtremalSnapshot].collect()
-        .zipWithIndex.groupBy(_._1.event_type)
-        .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
-    } finally q.stop()
-  }
+                        thr: Map[String, Double]): Map[String, ExtremalSnapshot] =
+    lastPerKey(replay(slices)(ExtremalStream.run(_, thr)))(_.event_type)
 
   test("streaming extremal index matches batch q368 across three slicings") {
     val rs = readings

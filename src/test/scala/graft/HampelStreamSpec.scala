@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.{HampelSnapshot, HampelStream, SensorReading}
 
 /** Streaming Hampel must equal batch q415 (`hampelCensus`) EXACTLY after
@@ -37,19 +36,8 @@ class HampelStreamSpec extends SparkSpec {
   }
 
   private def runSliced(slices: Seq[Seq[SensorReading]])
-      : Map[String, HampelSnapshot] = {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[SensorReading]
-    val name = s"hampel_${System.nanoTime()}"
-    val q = HampelStream.run(mem.toDS()).writeStream
-      .format("memory").queryName(name).outputMode("append").start()
-    try {
-      slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
-      spark.table(name).as[HampelSnapshot].collect()
-        .zipWithIndex.groupBy(_._1.series_key)
-        .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
-    } finally q.stop()
-  }
+      : Map[String, HampelSnapshot] =
+    lastPerKey(replay(slices)(HampelStream.run(_)))(_.series_key)
 
   test("streaming Hampel matches batch q415 across three slicings") {
     val rs = readings

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.{HoltWintersStream, HwSnapshot, SensorReading}
 
 /** Streaming Holt-Winters must equal the batch q273 fold EXACTLY after the
@@ -36,19 +35,8 @@ class HoltWintersStreamSpec extends SparkSpec {
     (a ++ b).sortBy(r => (r.ts.getTime, r.event_id))
   }
 
-  private def runSliced(slices: Seq[Seq[SensorReading]]): Map[String, HwSnapshot] = {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[SensorReading]
-    val name = s"hw_${System.nanoTime()}"
-    val q = HoltWintersStream.run(mem.toDS()).writeStream
-      .format("memory").queryName(name).outputMode("append").start()
-    try {
-      slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
-      spark.table(name).as[HwSnapshot].collect()
-        .zipWithIndex.groupBy(_._1.event_type)
-        .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
-    } finally q.stop()
-  }
+  private def runSliced(slices: Seq[Seq[SensorReading]]): Map[String, HwSnapshot] =
+    lastPerKey(replay(slices)(HoltWintersStream.run(_)))(_.event_type)
 
   test("streaming Holt-Winters matches batch q273 across three slicings") {
     val rs = readings

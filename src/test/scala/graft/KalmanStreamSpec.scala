@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.{KalmanSnapshot, KalmanStream, SensorReading}
 
 /** Streaming Kalman must equal the batch q287 fold EXACTLY after the same
@@ -31,19 +30,8 @@ class KalmanStreamSpec extends SparkSpec {
     (a ++ b).sortBy(r => (r.ts.getTime, r.event_id))
   }
 
-  private def runSliced(slices: Seq[Seq[SensorReading]]): Map[String, KalmanSnapshot] = {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[SensorReading]
-    val name = s"kal_${System.nanoTime()}"
-    val q = KalmanStream.run(mem.toDS()).writeStream
-      .format("memory").queryName(name).outputMode("append").start()
-    try {
-      slices.foreach { s => mem.addData(s: _*); q.processAllAvailable() }
-      spark.table(name).as[KalmanSnapshot].collect()
-        .zipWithIndex.groupBy(_._1.event_type)
-        .map { case (k, arr) => k -> arr.maxBy(_._2)._1 }
-    } finally q.stop()
-  }
+  private def runSliced(slices: Seq[Seq[SensorReading]]): Map[String, KalmanSnapshot] =
+    lastPerKey(replay(slices)(KalmanStream.run(_)))(_.event_type)
 
   test("streaming Kalman matches batch q287 across three slicings") {
     val rs = readings

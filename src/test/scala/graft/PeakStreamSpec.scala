@@ -51,4 +51,17 @@ class PeakStreamSpec extends SparkSpec {
       assert(streamed.toLong === batch)
     } finally q.stop()
   }
+
+  test("points within one second replay in full-precision ts order") {
+    // q162 windows on (ts, event_id) at full precision: id 3 (10.1 s) sits
+    // between id 1 and id 2 (10.9 s) and is a peak, though id 2 < id 3
+    val pts = Seq(pt("s", 9, 1, 0.0),
+      SeriesPoint("s", new Timestamp(10100), 3, 5.0),
+      SeriesPoint("s", new Timestamp(10900), 2, 1.0),
+      pt("s", 11, 4, 10.0))
+    val batch = ops.TimeSeries.peakCensus(pts.toDF())
+      .agg(sum("n_peaks")).as[Long].head()
+    assert(batch === 1L)
+    assert(replay(Seq(pts))(PeakStream.peaks) === Seq(Peak("s", 10, 3, 5.0)))
+  }
 }
