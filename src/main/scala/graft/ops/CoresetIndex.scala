@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental coreset maintenance — the diversity-sampling member of the
@@ -11,13 +11,12 @@ import org.apache.spark.sql.functions._
   * and a coreset chosen yesterday silently stops covering a corpus that
   * drifted. The production shape persisted here:
   *
-  *   - `path/centers.parquet` — the frozen centers (c, i, cd), long format,
-  *     O(t·dim) rows, selected ONCE by the q392 traversal;
-  *   - `path/census.parquet`  — the build-time selection census (per-pick
-  *     radius + coverage), whose FINAL cov_max is the build radius — the
-  *     coverage contract the coreset promised;
-  *   - `path/cover.parquet`   — per-vector (vec_id, nearest center, d²),
-  *     append-only.
+  *   - `centers` — the frozen centers (c, i, cd), long format, O(t·dim)
+  *     rows, selected ONCE by the q392 traversal;
+  *   - `census`  — the build-time selection census (per-pick radius +
+  *     coverage), whose FINAL cov_max is the build radius — the coverage
+  *     contract the coreset promised;
+  *   - `cover`   — per-vector (vec_id, nearest center, d²), append-only.
   *
   * [[append]] covers ONLY the new batch against the broadcast centers
   * (O(new × t), the same exact-decimal d² as the trainer — see
@@ -40,42 +39,32 @@ object CoresetIndex {
   /** Select the coreset on the initial corpus, persist centers + census +
     * full cover.
     */
-  def build(emb: DataFrame, path: String, t: Int = 6): Unit = {
-    val census = Similarity.kcenterCoreset(emb, t).localCheckpoint()
-    val ids = census.select(col("center_id"))
-    val cent = Similarity.asDoubles(emb)
-      .join(broadcast(ids), col("vec_id") === col("center_id"))
-      .select(col("center_id").as("c"), posexplode(col("v")).as(Seq("i", "cd")))
-    cent.write.mode(SaveMode.Overwrite).parquet(s"$path/centers.parquet")
-    census.write.mode(SaveMode.Overwrite).parquet(s"$path/census.parquet")
-    IvfIndex.assignTo(cent, emb)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/cover.parquet")
-  }
+  def build(emb: DataFrame, path: String, t: Int = 6): Unit =
+    IndexLog.replace(path) { put =>
+      val ids = put("census", Similarity.kcenterCoreset(emb, t)).select(col("center_id"))
+      val cent = put("centers", Similarity.asDoubles(emb)
+        .join(broadcast(ids), col("vec_id") === col("center_id"))
+        .select(col("center_id").as("c"), posexplode(col("v")).as(Seq("i", "cd"))))
+      put("cover", IvfIndex.assignTo(cent, emb))
+    }
 
   def centers(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/centers.parquet")
-      .select(col("c"), col("i"), col("cd"))
+    IndexLog.read(spark, path, "centers").select(col("c"), col("i"), col("cd"))
 
   def cover(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/cover.parquet")
-      .select(col("vec_id"), col("c"), col("d2"))
+    IndexLog.read(spark, path, "cover").select(col("vec_id"), col("c"), col("d2"))
 
   /** The build-time coverage contract: the final pick's cov_max. */
   def buildRadius(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/census.parquet")
+    IndexLog.read(spark, path, "census")
       .orderBy(col("k").desc).limit(1)
       .select(col("cov_max").as("radius"))
 
   /** Cover a new batch against the FROZEN centers and append. Returns the
     * new cover rows. O(new × t); never reads the existing cover.
     */
-  def append(spark: SparkSession, path: String, newVecs: DataFrame): DataFrame = {
-    val cov = IvfIndex.assignTo(centers(spark, path), newVecs)
-    // materialize before mutating the files the plan could read from
-    val out = cov.localCheckpoint()
-    out.write.mode(SaveMode.Append).parquet(s"$path/cover.parquet")
-    out
-  }
+  def append(spark: SparkSession, path: String, newVecs: DataFrame): DataFrame =
+    IndexLog.append(path)(_("cover", IvfIndex.assignTo(centers(spark, path), newVecs)))
 
   /** Coverage-decay audit over the current cover table: per center the
     * member count, max and (snapped) mean d², and the count of members

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental MinHash-LSH maintenance — the batch [[Dedup.minhashLsh]]
@@ -9,18 +8,8 @@ import org.apache.spark.sql.functions._
   * one (doc_id, band, sig) row per document per band; an append batch
   * signatures ONLY the new documents and joins them against the index, so
   * per-append cost is O(new batch + touched buckets), never O(corpus).
-  *
-  * Scale posture of [[appendDocs]]:
-  *   - the index is never scanned in full per append: a semi-join on the
-  *     new batch's distinct (band, sig) set — tiny, broadcast — reduces the
-  *     index side to exactly the buckets the new documents touch before
-  *     anything shuffles;
-  *   - bucket-size capping (see [[Dedup.minhashLsh]]) is computed on the
-  *     COMBINED bucket (index rows + new rows), so an append that pushes a
-  *     bucket over the cap suppresses its pair expansion the same way a
-  *     from-scratch batch build would;
-  *   - new signatures append to the index as additional parquet files — no
-  *     rewrite of existing data.
+  * [[appendDocs]] runs [[IndexLog.bandedPairs]] with the bucket cap of
+  * [[Dedup.minhashLsh]].
   *
   * Batch ≡ incremental: as long as no bucket crosses `maxBucket` between
   * builds, pairs(full corpus) == pairs(old corpus) ∪ appendDocs(new batch)
@@ -31,12 +20,11 @@ object DedupIndex {
 
   /** Build (or rebuild) the index from a full corpus. */
   def build(docs: DataFrame, path: String, k: Int = 12, bands: Int = 3): Unit =
-    Dedup.bandSignatures(docs, k, bands)
-      .write.mode(SaveMode.Overwrite).parquet(path)
+    IndexLog.replace(path)(_("sigs", Dedup.bandSignatures(docs, k, bands)))
 
   /** The persisted band-signature index: (doc_id, band, sig). */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(col("doc_id"), col("band"), col("sig"))
+    IndexLog.read(spark, path, "sigs").select(col("doc_id"), col("band"), col("sig"))
 
   /** Candidate pairs contributed by `newDocs` — (doc_a, doc_b,
     * n_shared_bands) with at least one NEW endpoint — and append the new
@@ -44,36 +32,11 @@ object DedupIndex {
     * size cap) match [[Dedup.minhashLsh]] on the combined corpus.
     */
   def appendDocs(spark: SparkSession, path: String, newDocs: DataFrame,
-                 k: Int = 12, bands: Int = 3, maxBucket: Int = 64): DataFrame = {
-    val newSigs = Dedup.bandSignatures(newDocs, k, bands)
-
-    // touch only the buckets the new batch lands in: the distinct new
-    // (band, sig) inventory is bounded by |new batch| * bands — broadcast it
-    val touched = newSigs.select(col("band"), col("sig")).distinct()
-    val relevant = read(spark, path)
-      .join(broadcast(touched), Seq("band", "sig"), "left_semi")
-
-    // unionByName: the semi-join output leads with its join keys, so a
-    // positional union would misalign doc_id with band
-    val combined = relevant.withColumn("is_new", lit(false))
-      .unionByName(newSigs.withColumn("is_new", lit(true)))
-    val capped = combined
-      .withColumn("bc", count(lit(1)).over(Window.partitionBy(col("band"), col("sig"))))
-      .where(col("bc") <= maxBucket)
-    val a = capped.select(col("doc_id").as("doc_a"), col("band"), col("sig"),
-      col("is_new").as("new_a"))
-    val b = capped.select(col("doc_id").as("doc_b"), col("band"), col("sig"),
-      col("is_new").as("new_b"))
-    val pairs = a.join(b, Seq("band", "sig"))
-      .where(col("doc_a") < col("doc_b") && (col("new_a") || col("new_b")))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-
-    // materialize before mutating the index the plan reads from
-    val out = pairs.localCheckpoint()
-    newSigs.write.mode(SaveMode.Append).parquet(path)
-    out
-  }
+                 k: Int = 12, bands: Int = 3, maxBucket: Int = 64): DataFrame =
+    IndexLog.append(path) { put =>
+      val newSigs = put("sigs", Dedup.bandSignatures(newDocs, k, bands))
+      IndexLog.bandedPairs(read(spark, path), newSigs, "doc", maxBucket)
+    }
 
   /** Incremental EXACT-dedup maintenance — the md5 twin of the LSH index,
     * completing the trilogy (LSH bands here, SRP bands in VecIndex, exact
@@ -87,9 +50,9 @@ object DedupIndex {
     * (IncrementalDedupSpec asserts batch ≡ build+append).
     */
   def buildExact(docs: DataFrame, path: String): Unit =
-    docs.select(md5(Dedup.normText(col("text"))).as("h"), col("doc_id"))
-      .groupBy(col("h")).agg(min(col("doc_id")).as("keeper"))
-      .write.mode(SaveMode.Overwrite).parquet(path)
+    IndexLog.replace(path)(_("hashes",
+      docs.select(md5(Dedup.normText(col("text"))).as("h"), col("doc_id"))
+        .groupBy(col("h")).agg(min(col("doc_id")).as("keeper"))))
 
   /** Verdicts for `newDocs` — (doc_id, h, keeper, is_dup) — and append the
     * batch's newly-seen hashes to the index. Per-append cost: O(new batch +
@@ -99,23 +62,20 @@ object DedupIndex {
   def appendExact(spark: SparkSession, path: String, newDocs: DataFrame): DataFrame = {
     val hashed = newDocs.select(col("doc_id"), md5(Dedup.normText(col("text"))).as("h"))
     val touched = hashed.select(col("h")).distinct()
-    val existing = spark.read.parquet(path)
+    val existing = IndexLog.read(spark, path, "hashes")
       .join(broadcast(touched), Seq("h"), "left_semi")
       .select(col("h"), col("keeper").as("old_keeper"))
     // in-batch keep-first for hashes the index has never seen
     val batchMin = hashed.groupBy(col("h")).agg(min(col("doc_id")).as("batch_keeper"))
-    val verdict = hashed
+    // persist only hashes that were NOT already present (first writer wins)
+    IndexLog.append(path)(_("hashes", batchMin
+      .join(existing, Seq("h"), "left_anti")
+      .select(col("h"), col("batch_keeper").as("keeper"))))
+    hashed
       .join(batchMin, "h")
       .join(existing, Seq("h"), "left_outer")
       .withColumn("keeper", coalesce(col("old_keeper"), col("batch_keeper")))
       .select(col("doc_id"), col("h"), col("keeper"),
         (col("doc_id") =!= col("keeper")).as("is_dup"))
-    val out = verdict.localCheckpoint()
-    // persist only hashes that were NOT already present (first writer wins)
-    batchMin
-      .join(existing, Seq("h"), "left_anti")
-      .select(col("h"), col("batch_keeper").as("keeper"))
-      .write.mode(SaveMode.Append).parquet(path)
-    out
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.DecimalDot
@@ -12,23 +12,23 @@ import graft.functions.DecimalDot
   * batch build uses: SRP-LSH candidate edges, exact-cosine scored, with
   * the DEGREE BOUND applied at READ time over an append-only edge log.
   *
-  * The index persists three parquet datasets under `path`:
-  *   - `sigs/`  (vec_id, band, sig)   — fixed-geometry SRP signatures
+  * The index persists three [[IndexLog]] tables under `path`:
+  *   - `sigs`  (vec_id, band, sig)   — fixed-geometry SRP signatures
   *     (the [[VecIndex]] posture: geometry must NOT depend on corpus size
   *     or appends would re-signature the world; auto-scaled geometry is
   *     for one-shot batch audits)
-  *   - `vecs/`  (vec_id, v, nrm)      — vectors for exact edge scoring
+  *   - `vecs`  (vec_id, v, nrm)      — vectors for exact edge scoring
   *     (what HNSW stores too; zero-norm vectors are dropped — q440 guard)
-  *   - `edges/` (vec_a, vec_b, n_shared_bands, cos) — canonical a < b
+  *   - `edges` (vec_a, vec_b, n_shared_bands, cos) — canonical a < b
   *     candidate edges, append-only
   *
-  * An append signatures ONLY the new vectors, semi-joins the bucket
-  * inventory they touch (broadcast), scores candidate pairs with ≥ 1 new
-  * endpoint against stored + new vectors, and appends those edges —
-  * per-append cost O(new batch + touched buckets), never O(corpus).
-  * Old edges are never rewritten: the degree-bounded neighbor list is a
-  * read-time window (cos desc, neighbor asc — the q440 tie order) over
-  * the log, so "maintenance" is pure parquet append.
+  * An append signatures ONLY the new vectors, finds the candidate pairs
+  * with ≥ 1 new endpoint in the buckets they touch
+  * ([[IndexLog.bandedPairs]]), scores them against stored + new vectors,
+  * and commits signatures, vectors and edges as one batch — per-append
+  * cost O(new batch + touched buckets), never O(corpus). Old edges are
+  * never rewritten: the degree-bounded neighbor list is a read-time window
+  * (cos desc, neighbor asc — the q440 tie order) over the log.
   *
   * Batch ≡ build+append (IncrementalGraphAnnSpec): bucket membership is
   * append-invariant under fixed geometry, so the full-corpus edge set is
@@ -45,103 +45,70 @@ object GraphIndex {
       .withColumn("nrm", sqrt(DecimalDot(col("v"), col("v"))))
       .where(col("nrm") > 0)
 
+  /** Candidate pairs scored by exact cosine against the vectors `vs`. */
+  private def scored(pairs: DataFrame, vs: DataFrame): DataFrame =
+    pairs
+      .join(vs.select(col("vec_id").as("vec_a"), col("v").as("va"),
+        col("nrm").as("na")), "vec_a")
+      .join(vs.select(col("vec_id").as("vec_b"), col("v").as("vb"),
+        col("nrm").as("nb")), "vec_b")
+      .select(col("vec_a"), col("vec_b"), col("n_shared_bands"),
+        round(DecimalDot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
+          .as("cos"))
+
   /** Exact-cosine-scored candidate edges of a corpus — the batch
     * reference the incremental log must reproduce.
     */
   def edgeLog(emb: DataFrame, dim: Int = 64, nPlanes: Int = 32,
-              nBands: Int = 4, maxBucket: Int = 1024): DataFrame = {
-    val vs = prepped(emb)
-    Similarity.srpCandidates(emb, dim, nPlanes, nBands,
-        minBands = 1, maxBucket = maxBucket)
-      .join(vs.select(col("vec_id").as("vec_a"), col("v").as("va"),
-        col("nrm").as("na")), "vec_a")
-      .join(vs.select(col("vec_id").as("vec_b"), col("v").as("vb"),
-        col("nrm").as("nb")), "vec_b")
-      .select(col("vec_a"), col("vec_b"), col("n_shared_bands"),
-        round(DecimalDot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
-          .as("cos"))
-  }
+              nBands: Int = 4, maxBucket: Int = 1024): DataFrame =
+    scored(Similarity.srpCandidates(emb, dim, nPlanes, nBands,
+      minBands = 1, maxBucket = maxBucket), prepped(emb))
 
   def build(emb: DataFrame, path: String, dim: Int = 64, nPlanes: Int = 32,
-            nBands: Int = 4, maxBucket: Int = 1024): Unit = {
-    Similarity.srpSignatures(emb, dim, nPlanes, nBands)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/sigs")
-    prepped(emb).write.mode(SaveMode.Overwrite).parquet(s"$path/vecs")
-    edgeLog(emb, dim, nPlanes, nBands, maxBucket)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/edges")
-  }
+            nBands: Int = 4, maxBucket: Int = 1024): Unit =
+    IndexLog.replace(path) { put =>
+      put("sigs", Similarity.srpSignatures(emb, dim, nPlanes, nBands))
+      put("vecs", prepped(emb))
+      put("edges", edgeLog(emb, dim, nPlanes, nBands, maxBucket))
+    }
 
   /** New candidate edges (≥ 1 new endpoint); appends signatures, vectors
-    * and those edges to the index.
+    * and those edges to the index in one commit.
     */
   def appendVecs(spark: SparkSession, path: String, newVecs: DataFrame,
                  dim: Int = 64, nPlanes: Int = 32, nBands: Int = 4,
-                 maxBucket: Int = 1024): DataFrame = {
-    val newSigs = Similarity.srpSignatures(newVecs, dim, nPlanes, nBands)
-    val touched = newSigs.select(col("band"), col("sig")).distinct()
-    val relevant = spark.read.parquet(s"$path/sigs")
-      .join(broadcast(touched), Seq("band", "sig"), "left_semi")
-    val combined = relevant.withColumn("is_new", lit(false))
-      .unionByName(newSigs.withColumn("is_new", lit(true)))
-    val capped = combined
-      .withColumn("bc",
-        count(lit(1)).over(Window.partitionBy(col("band"), col("sig"))))
-      .where(col("bc") <= maxBucket)
-    val a = capped.select(col("vec_id").as("vec_a"), col("band"),
-      col("sig"), col("is_new").as("new_a"))
-    val b = capped.select(col("vec_id").as("vec_b"), col("band"),
-      col("sig"), col("is_new").as("new_b"))
-    val pairs = a.join(b, Seq("band", "sig"))
-      .where(col("vec_a") < col("vec_b") && (col("new_a") || col("new_b")))
-      .groupBy(col("vec_a"), col("vec_b"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-    val newPrepped = prepped(newVecs)
-    val vs = spark.read.parquet(s"$path/vecs").unionByName(newPrepped)
-    val edges = pairs
-      .join(vs.select(col("vec_id").as("vec_a"), col("v").as("va"),
-        col("nrm").as("na")), "vec_a")
-      .join(vs.select(col("vec_id").as("vec_b"), col("v").as("vb"),
-        col("nrm").as("nb")), "vec_b")
-      .select(col("vec_a"), col("vec_b"), col("n_shared_bands"),
-        round(DecimalDot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
-          .as("cos"))
-    // materialize before mutating the datasets the plan reads from
-    val out = edges.localCheckpoint()
-    newSigs.write.mode(SaveMode.Append).parquet(s"$path/sigs")
-    newPrepped.write.mode(SaveMode.Append).parquet(s"$path/vecs")
-    out.write.mode(SaveMode.Append).parquet(s"$path/edges")
-    out
-  }
+                 maxBucket: Int = 1024): DataFrame =
+    IndexLog.append(path) { put =>
+      val newSigs = put("sigs", Similarity.srpSignatures(newVecs, dim, nPlanes, nBands))
+      val newPrepped = put("vecs", prepped(newVecs))
+      put("edges", scored(
+        IndexLog.bandedPairs(IndexLog.read(spark, path, "sigs"), newSigs, "vec", maxBucket),
+        IndexLog.read(spark, path, "vecs").unionByName(newPrepped)))
+    }
 
-  /** The degree-bounded adjacency q440's beam walk consumes, as a
-    * read-time window over the append-only edge log (cos desc, neighbor
-    * asc — the batch tie order, so build+append ≡ batch bit-for-bit).
+  /** The degree bound q440's beam walk consumes: each vertex's `degree`
+    * best neighbors over the symmetric edge list (cos desc, neighbor asc —
+    * the batch tie order, so build+append ≡ batch bit-for-bit).
     */
-  def readAdjacency(spark: SparkSession, path: String,
-                    degree: Int = 8): DataFrame = {
-    val e = spark.read.parquet(s"$path/edges")
-    val sym = e.select(col("vec_a").as("v"), col("vec_b").as("o"), col("cos"))
+  private def degreeBound(e: DataFrame, degree: Int): DataFrame =
+    e.select(col("vec_a").as("v"), col("vec_b").as("o"), col("cos"))
       .unionByName(
         e.select(col("vec_b").as("v"), col("vec_a").as("o"), col("cos")))
-    sym.withColumn("rn", row_number().over(
+      .withColumn("rn", row_number().over(
         Window.partitionBy(col("v")).orderBy(col("cos").desc, col("o"))))
       .where(col("rn") <= degree)
       .select(col("v"), col("o"), col("cos"))
-  }
+
+  /** The degree-bounded adjacency, read-time over the append-only edges. */
+  def readAdjacency(spark: SparkSession, path: String,
+                    degree: Int = 8): DataFrame =
+    degreeBound(IndexLog.read(spark, path, "edges"), degree)
 
   /** The same degree bound applied directly to a batch edge log —
     * the parity reference for [[readAdjacency]].
     */
   def batchAdjacency(emb: DataFrame, degree: Int = 8, dim: Int = 64,
                      nPlanes: Int = 32, nBands: Int = 4,
-                     maxBucket: Int = 1024): DataFrame = {
-    val e = edgeLog(emb, dim, nPlanes, nBands, maxBucket)
-    val sym = e.select(col("vec_a").as("v"), col("vec_b").as("o"), col("cos"))
-      .unionByName(
-        e.select(col("vec_b").as("v"), col("vec_a").as("o"), col("cos")))
-    sym.withColumn("rn", row_number().over(
-        Window.partitionBy(col("v")).orderBy(col("cos").desc, col("o"))))
-      .where(col("rn") <= degree)
-      .select(col("v"), col("o"), col("cos"))
-  }
+                     maxBucket: Int = 1024): DataFrame =
+    degreeBound(edgeLog(emb, dim, nPlanes, nBands, maxBucket), degree)
 }

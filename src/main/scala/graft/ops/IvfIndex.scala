@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental IVF maintenance — the missing leg of the persisted-index
@@ -11,15 +10,14 @@ import org.apache.spark.sql.functions._
   * centroids per ingest batch is wasted work AND silently invalidates every
   * already-assigned list. The production shape is the one persisted here:
   *
-  *   - `path/centroids.parquet` — the frozen codebook (c, i, cd), long
-  *     format, O(k·dim) rows, trained ONCE with the same fixed-round Lloyd
-  *     as q259 ([[Similarity.lloydState]]).
-  *   - `path/assign.parquet`    — the inverted lists (vec_id, c, d2),
-  *     append-only.
+  *   - `centroids` — the frozen codebook (c, i, cd), long format, O(k·dim)
+  *     rows, trained ONCE with the same fixed-round Lloyd as q259
+  *     ([[Similarity.lloydState]]).
+  *   - `assign`    — the inverted lists (vec_id, c, d2), append-only.
   *
   * [[append]] assigns ONLY the new batch against the broadcast codebook —
-  * O(new × k) work, no shuffle of existing lists, new files append without
-  * rewriting — so the parity contract is exact by construction:
+  * O(new × k) work, no shuffle of existing lists — so the parity contract
+  * is exact by construction:
   * assignments(build(old) then append(new)) == assignTo(codebook, old ∪ new)
   * row for row (IncrementalIvfSpec). [[reassignCensus]] is the drift audit
   * that tells you WHEN the frozen codebook has gone stale: one Lloyd
@@ -63,30 +61,24 @@ object IvfIndex {
   def build(emb: DataFrame, path: String, k: Int = 4, iters: Int = 2): Unit = {
     val (cent, asg) = Similarity.lloydState(
       Similarity.asDoubles(emb).select(col("vec_id"), col("v")), k, iters)
-    cent.write.mode(SaveMode.Overwrite).parquet(s"$path/centroids.parquet")
-    asg.select(col("vec_id"), col("c"), col("d2"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/assign.parquet")
+    IndexLog.replace(path) { put =>
+      put("centroids", cent)
+      put("assign", asg.select(col("vec_id"), col("c"), col("d2")))
+    }
   }
 
   def centroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/centroids.parquet")
-      .select(col("c"), col("i"), col("cd"))
+    IndexLog.read(spark, path, "centroids").select(col("c"), col("i"), col("cd"))
 
   def assignments(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/assign.parquet")
-      .select(col("vec_id"), col("c"), col("d2"))
+    IndexLog.read(spark, path, "assign").select(col("vec_id"), col("c"), col("d2"))
 
   /** Assign a new batch against the FROZEN codebook and append its list
     * entries. Returns the new assignments. O(new × k); never reads the
     * existing lists.
     */
-  def append(spark: SparkSession, path: String, newVecs: DataFrame): DataFrame = {
-    val asg = assignTo(centroids(spark, path), newVecs)
-    // materialize before mutating the files the plan could read from
-    val out = asg.localCheckpoint()
-    out.write.mode(SaveMode.Append).parquet(s"$path/assign.parquet")
-    out
-  }
+  def append(spark: SparkSession, path: String, newVecs: DataFrame): DataFrame =
+    IndexLog.append(path)(_("assign", assignTo(centroids(spark, path), newVecs)))
 
   /** Codebook-staleness audit: refresh each centroid one Lloyd step from
     * the CURRENT lists (1e-12-snapped means, the trainer's discipline),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental distinct-count maintenance — the fifth leg of the index
@@ -17,11 +17,10 @@ import org.apache.spark.sql.functions._
   * that), but build+append parity with a full rebuild is BIT-exact, which
   * is what SketchIndexSpec asserts.
   *
-  * Scale posture: appends write only the batch's |sources| sketch rows
-  * (~1.5 KB each at lgK=12) as new parquet files — no read-modify-write, no
-  * shuffle against existing data; [[read]] union-merges |sources| ×
-  * n_appends sketch rows at scan time; [[compact]] folds back to one row
-  * per source.
+  * Scale posture: an append stores only the batch's |sources| sketch rows
+  * (~1.5 KB each at lgK=12) in the [[IndexLog]]; [[read]] union-merges
+  * |sources| × n_appends sketch rows at scan time; [[compact]] folds back
+  * to one row per source.
   */
 object SketchIndex {
 
@@ -39,25 +38,23 @@ object SketchIndex {
 
   /** Build (or rebuild) the index from a full corpus. */
   def build(docs: DataFrame, path: String): Unit =
-    sourceSketches(docs).write.mode(SaveMode.Overwrite).parquet(path)
+    IndexLog.replace(path)(_("sketches", sourceSketches(docs)))
 
   /** Fold a new document batch in: append its sketch rows — O(batch). */
   def appendDocs(docs: DataFrame, path: String): Unit =
-    sourceSketches(docs).write.mode(SaveMode.Append).parquet(path)
+    IndexLog.append(path)(_("sketches", sourceSketches(docs)))
 
   /** The merged sketch table: one (source, sketch) row, the union over
     * every build/append batch.
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    IndexLog.read(spark, path, "sketches")
       .groupBy(col("source"))
       .agg(call_function("hll_union_agg", col("sk")).as("sk"))
 
   /** Rewrite the index to its merged one-row-per-source form. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val merged = read(spark, path).localCheckpoint()
-    merged.write.mode(SaveMode.Overwrite).parquet(path)
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    IndexLog.replace(path)(_("sketches", read(spark, path)))
 
   /** Distinct-token estimates per source from the index alone. */
   def estimates(spark: SparkSession, path: String): DataFrame =

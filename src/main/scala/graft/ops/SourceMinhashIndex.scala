@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental source-level MinHash maintenance — the fourth leg of the
@@ -17,42 +17,36 @@ import org.apache.spark.sql.functions._
   * asserts batch ≡ build+append parity here).
   *
   * Scale posture:
-  *   - appends write ONLY the new batch's signature rows (|sources| × k per
-  *     batch, tiny) as additional parquet files — no read, no rewrite, no
-  *     shuffle against existing data; a 100 TB corpus's index grows by
-  *     kilobytes per append;
+  *   - an append stores ONLY the new batch's signature rows (|sources| × k
+  *     per batch, tiny) in the [[IndexLog]]; a 100 TB corpus's index grows
+  *     by kilobytes per append;
   *   - [[read]] min-merges at scan time (one groupBy over |sources| × k ×
-  *     n_appends rows); [[compact]] folds the files back to one row per
+  *     n_appends rows); [[compact]] folds the batches back to one row per
   *     (source, salt) when the append count grows.
   */
 object SourceMinhashIndex {
 
   /** Build (or rebuild) the index from a full corpus. */
   def build(docs: DataFrame, path: String, k: Int = 12): Unit =
-    Dedup.sourceSignatures(docs, k)
-      .write.mode(SaveMode.Overwrite).parquet(path)
+    IndexLog.replace(path)(_("sigs", Dedup.sourceSignatures(docs, k)))
 
   /** Fold a new document batch into the index: append its signature rows.
     * Min-merge happens at read time, so this is write-only — O(batch).
     */
   def appendDocs(docs: DataFrame, path: String, k: Int = 12): Unit =
-    Dedup.sourceSignatures(docs, k)
-      .write.mode(SaveMode.Append).parquet(path)
+    IndexLog.append(path)(_("sigs", Dedup.sourceSignatures(docs, k)))
 
   /** The merged signature table: one (source, salt, m) row per component,
     * the component-wise min over every build/append batch.
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    IndexLog.read(spark, path, "sigs")
       .groupBy(col("source"), col("salt"))
       .agg(min(col("m")).as("m"))
 
   /** Rewrite the index to its merged form — one row per (source, salt). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    // materialize before overwriting the path the plan reads from
-    val merged = read(spark, path).localCheckpoint()
-    merged.write.mode(SaveMode.Overwrite).parquet(path)
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    IndexLog.replace(path)(_("sigs", read(spark, path)))
 
   /** Pairwise source similarity estimates from the index alone: matching
     * components / k (q278's est_j, without the exact-side audit). The join

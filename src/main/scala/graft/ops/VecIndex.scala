@@ -1,22 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental SRP-LSH maintenance for embeddings — the vector-side twin of
   * [[DedupIndex]]: batch [[Similarity.srpLsh]] recomputes the world, but a
   * growing corpus APPENDS vectors. The index persists one (vec_id, band,
   * sig) row per vector per band; an append batch signatures ONLY the new
-  * vectors and joins them against the buckets they touch, so per-append
-  * cost is O(new batch + touched buckets), never O(corpus).
-  *
-  * Same scale guarantees as the text index: the new batch's distinct
-  * (band, sig) inventory is broadcast for a semi-join that prunes the index
-  * read; bucket capping runs on the COMBINED bucket so an append that
-  * pushes a bucket over `maxBucket` suppresses it exactly like a
-  * from-scratch build; new signatures append as parquet files without
-  * rewriting existing data. Batch ≡ incremental (IncrementalAnnSpec):
+  * vectors and joins them against the buckets they touch
+  * ([[IndexLog.bandedPairs]], the kernel shared with [[DedupIndex]] and
+  * [[GraphIndex]]), so per-append cost is O(new batch + touched buckets),
+  * never O(corpus). Batch ≡ incremental (IncrementalAnnSpec):
   * candidates(full) == candidates(old) ∪ appendVecs(new) as long as no
   * bucket crosses the cap between builds.
   */
@@ -24,42 +18,20 @@ object VecIndex {
 
   def build(emb: DataFrame, path: String, dim: Int = 64, nPlanes: Int = 32,
             nBands: Int = 4): Unit =
-    Similarity.srpSignatures(emb, dim, nPlanes, nBands)
-      .write.mode(SaveMode.Overwrite).parquet(path)
+    IndexLog.replace(path)(
+      _("sigs", Similarity.srpSignatures(emb, dim, nPlanes, nBands)))
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(col("vec_id"), col("band"), col("sig"))
+    IndexLog.read(spark, path, "sigs").select(col("vec_id"), col("band"), col("sig"))
 
   /** Candidate pairs with at least one NEW endpoint; appends the new
     * vectors' signatures to the index.
     */
   def appendVecs(spark: SparkSession, path: String, newVecs: DataFrame,
                  dim: Int = 64, nPlanes: Int = 32, nBands: Int = 4,
-                 minBands: Int = 1, maxBucket: Int = 1024): DataFrame = {
-    val newSigs = Similarity.srpSignatures(newVecs, dim, nPlanes, nBands)
-
-    val touched = newSigs.select(col("band"), col("sig")).distinct()
-    val relevant = read(spark, path)
-      .join(broadcast(touched), Seq("band", "sig"), "left_semi")
-
-    val combined = relevant.withColumn("is_new", lit(false))
-      .unionByName(newSigs.withColumn("is_new", lit(true)))
-    val capped = combined
-      .withColumn("bc", count(lit(1)).over(Window.partitionBy(col("band"), col("sig"))))
-      .where(col("bc") <= maxBucket)
-    val a = capped.select(col("vec_id").as("vec_a"), col("band"), col("sig"),
-      col("is_new").as("new_a"))
-    val b = capped.select(col("vec_id").as("vec_b"), col("band"), col("sig"),
-      col("is_new").as("new_b"))
-    val pairs = a.join(b, Seq("band", "sig"))
-      .where(col("vec_a") < col("vec_b") && (col("new_a") || col("new_b")))
-      .groupBy(col("vec_a"), col("vec_b"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-      .where(col("n_shared_bands") >= minBands)
-
-    // materialize before mutating the index the plan reads from
-    val out = pairs.localCheckpoint()
-    newSigs.write.mode(SaveMode.Append).parquet(path)
-    out
-  }
+                 minBands: Int = 1, maxBucket: Int = 1024): DataFrame =
+    IndexLog.append(path) { put =>
+      val newSigs = put("sigs", Similarity.srpSignatures(newVecs, dim, nPlanes, nBands))
+      IndexLog.bandedPairs(read(spark, path), newSigs, "vec", maxBucket)
+    }.where(col("n_shared_bands") >= minBands)
 }

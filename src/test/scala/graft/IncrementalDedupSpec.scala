@@ -48,6 +48,21 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(oldPairs ++ appended ++ second === full)
   }
 
+  test("an append's result is a snapshot that a later append leaves alone") {
+    val path = Files.createTempDirectory("graft-lshidx3").resolve("idx").toString
+    DedupIndex.build(oldDocs, path)
+    val first = DedupIndex.appendDocs(spark, path, newDocs) // not evaluated yet
+    DedupIndex.appendDocs(spark, path,
+      Seq((20L, "novel content that matches nothing in the index", "s3"))
+        .toDF("doc_id", "text", "source"))
+
+    val alonePath = Files.createTempDirectory("graft-lshidx4").resolve("idx").toString
+    DedupIndex.build(oldDocs, alonePath)
+    val alone = pairSet(DedupIndex.appendDocs(spark, alonePath, newDocs))
+    assert(alone.nonEmpty)
+    assert(pairSet(first) === alone)
+  }
+
   test("an append that pushes a bucket over the cap suppresses its pairs") {
     val path = Files.createTempDirectory("graft-lshidx2").resolve("idx").toString
     DedupIndex.build(oldDocs, path)

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import graft.ops.GraphIndex
+import graft.ops.{GraphIndex, IndexLog}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, udf}
 
 /** Graph-ANN twin of IncrementalAnnSpec: the append-only edge log plus a
   * read-time degree window must reproduce the from-scratch base graph
@@ -54,4 +56,49 @@ class IncrementalGraphAnnSpec extends SparkSpec {
       oldVecs.union(newVecs).union(more), degree = 2, dim = 8))
     assert(incr2 === batch2)
   }
+
+  test("an append that fails after its first table write leaves the index as it was") {
+    val path = Files.createTempDirectory("graft-graphidx").resolve("idx").toString
+    GraphIndex.build(oldVecs, path, dim = 8)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    def state = (rows(IndexLog.read(spark, path, "sigs")),
+      rows(IndexLog.read(spark, path, "vecs")),
+      adjSet(GraphIndex.readAdjacency(spark, path, degree = 2)))
+    val before = state
+
+    // the embeddings turn poisonous once `sigs` holds more committed files
+    // than at build, i.e. on the first evaluation after the sigs write
+    val sigsDir = s"$path/sigs"
+    val built = IncrementalGraphAnnSpec.committedFiles(sigsDir)
+    val poison = udf { (e: Seq[Float]) =>
+      if (IncrementalGraphAnnSpec.committedFiles(sigsDir) > built)
+        throw new IllegalStateException("injected failure after the sigs write")
+      e
+    }
+    val torn = newVecs.withColumn("embedding", poison(col("embedding")))
+    intercept[Exception](GraphIndex.appendVecs(spark, path, torn, dim = 8))
+    assert(IncrementalGraphAnnSpec.committedFiles(sigsDir) > built,
+      "the failure must come after the sigs write")
+    assert(state === before)
+
+    // a retry with good input lands exactly once
+    GraphIndex.appendVecs(spark, path, newVecs, dim = 8)
+    val adj = GraphIndex.readAdjacency(spark, path, degree = 2)
+      .select("v", "o", "cos").as[(Long, Long, Double)].collect().toSeq
+    assert(adj.distinct.size === adj.size)
+    assert(adj.toSet === adjSet(
+      GraphIndex.batchAdjacency(oldVecs.union(newVecs), degree = 2, dim = 8)))
+    val edges = rows(IndexLog.read(spark, path, "edges"))
+    assert(edges.distinct === edges)
+  }
+}
+
+object IncrementalGraphAnnSpec {
+  /** Parquet part files under `dir` that a finished write committed (a
+    * `_temporary` directory holds a write still in flight). */
+  def committedFiles(dir: String): Int =
+    Option(new java.io.File(dir).listFiles()).fold(0)(_.map { f =>
+      if (f.isDirectory) { if (f.getName == "_temporary") 0 else committedFiles(f.getPath) }
+      else if (f.getName.startsWith("part-")) 1 else 0
+    }.sum)
 }
