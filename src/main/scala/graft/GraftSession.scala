@@ -8,7 +8,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Settings that differ from Spark's defaults: the graft extensions, UTC
   * (oracle parity), a 64 MB broadcast threshold, and the RocksDB state
-  * store, which `transformWithState` streams require. AQE with coalesce and
+  * store, which `transformWithState` streams require, and graft's local
+  * filesystem for `file:` ([[graft.sources.NioLocalFileSystem]]), which
+  * sets permissions and reads links in-process where Hadoop forks a
+  * `chmod` or `readlink` per checkpoint file. AQE with coalesce and
   * skew-join handling and parquet filter pushdown are Spark's defaults.
   * Shuffle partitions are sized to local cores; on a real cluster this is
   * set per deployment.
@@ -32,6 +35,8 @@ object GraftSession {
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config("spark.hadoop.fs.file.impl", "graft.sources.NioLocalFileSystem")
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.sources.NioLocalFs")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

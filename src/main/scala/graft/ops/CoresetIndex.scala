@@ -40,7 +40,7 @@ object CoresetIndex {
     * full cover.
     */
   def build(emb: DataFrame, path: String, t: Int = 6): Unit =
-    IndexLog.replace(path) { put =>
+    IndexLog.replace(emb.sparkSession, path) { put =>
       val ids = put("census", Similarity.kcenterCoreset(emb, t)).select(col("center_id"))
       val cent = put("centers", Similarity.asDoubles(emb)
         .join(broadcast(ids), col("vec_id") === col("center_id"))
@@ -64,7 +64,8 @@ object CoresetIndex {
     * new cover rows. O(new × t); never reads the existing cover.
     */
   def append(spark: SparkSession, path: String, newVecs: DataFrame): DataFrame =
-    IndexLog.append(path)(_("cover", IvfIndex.assignTo(centers(spark, path), newVecs)))
+    IndexLog.append(spark, path)(
+      _("cover", IvfIndex.assignTo(centers(spark, path), newVecs)))
 
   /** Coverage-decay audit over the current cover table: per center the
     * member count, max and (snapped) mean d², and the count of members

@@ -20,7 +20,8 @@ object DedupIndex {
 
   /** Build (or rebuild) the index from a full corpus. */
   def build(docs: DataFrame, path: String, k: Int = 12, bands: Int = 3): Unit =
-    IndexLog.replace(path)(_("sigs", Dedup.bandSignatures(docs, k, bands)))
+    IndexLog.replace(docs.sparkSession, path)(
+      _("sigs", Dedup.bandSignatures(docs, k, bands)))
 
   /** The persisted band-signature index: (doc_id, band, sig). */
   def read(spark: SparkSession, path: String): DataFrame =
@@ -33,7 +34,7 @@ object DedupIndex {
     */
   def appendDocs(spark: SparkSession, path: String, newDocs: DataFrame,
                  k: Int = 12, bands: Int = 3, maxBucket: Int = 64): DataFrame =
-    IndexLog.append(path) { put =>
+    IndexLog.append(spark, path) { put =>
       val newSigs = put("sigs", Dedup.bandSignatures(newDocs, k, bands))
       IndexLog.bandedPairs(read(spark, path), newSigs, "doc", maxBucket)
     }
@@ -50,7 +51,7 @@ object DedupIndex {
     * (IncrementalDedupSpec asserts batch ≡ build+append).
     */
   def buildExact(docs: DataFrame, path: String): Unit =
-    IndexLog.replace(path)(_("hashes",
+    IndexLog.replace(docs.sparkSession, path)(_("hashes",
       docs.select(md5(Dedup.normText(col("text"))).as("h"), col("doc_id"))
         .groupBy(col("h")).agg(min(col("doc_id")).as("keeper"))))
 
@@ -68,7 +69,7 @@ object DedupIndex {
     // in-batch keep-first for hashes the index has never seen
     val batchMin = hashed.groupBy(col("h")).agg(min(col("doc_id")).as("batch_keeper"))
     // persist only hashes that were NOT already present (first writer wins)
-    IndexLog.append(path)(_("hashes", batchMin
+    IndexLog.append(spark, path)(_("hashes", batchMin
       .join(existing, Seq("h"), "left_anti")
       .select(col("h"), col("batch_keeper").as("keeper"))))
     hashed

@@ -66,7 +66,7 @@ object GraphIndex {
 
   def build(emb: DataFrame, path: String, dim: Int = 64, nPlanes: Int = 32,
             nBands: Int = 4, maxBucket: Int = 1024): Unit =
-    IndexLog.replace(path) { put =>
+    IndexLog.replace(emb.sparkSession, path) { put =>
       put("sigs", Similarity.srpSignatures(emb, dim, nPlanes, nBands))
       put("vecs", prepped(emb))
       put("edges", edgeLog(emb, dim, nPlanes, nBands, maxBucket))
@@ -78,7 +78,7 @@ object GraphIndex {
   def appendVecs(spark: SparkSession, path: String, newVecs: DataFrame,
                  dim: Int = 64, nPlanes: Int = 32, nBands: Int = 4,
                  maxBucket: Int = 1024): DataFrame =
-    IndexLog.append(path) { put =>
+    IndexLog.append(spark, path) { put =>
       val newSigs = put("sigs", Similarity.srpSignatures(newVecs, dim, nPlanes, nBands))
       val newPrepped = put("vecs", prepped(newVecs))
       put("edges", scored(

@@ -39,17 +39,18 @@ object IndexLog {
     spark.read.parquet(dirs.map(d => s"$path/$d"): _*)
   }
 
-  def append[T](path: String)(body: Put => T): T =
-    commit(path, live(SparkSession.active, path))(body)
+  def append[T](spark: SparkSession, path: String)(body: Put => T): T =
+    commit(spark, path, live(spark, path))(body)
 
-  def replace[T](path: String)(body: Put => T): T = commit(path, Nil)(body)
+  def replace[T](spark: SparkSession, path: String)(body: Put => T): T =
+    commit(spark, path, Nil)(body)
 
   /** Runs `body` against batch `newest + 1`, commits `prev` plus the
     * directories it wrote, then deletes the older commit files and every
     * batch directory the commit does not list (superseded, or left by a
     * failed write). */
-  private def commit[T](path: String, prev: Seq[String])(body: Put => T): T = {
-    val spark = SparkSession.active
+  private def commit[T](spark: SparkSession, path: String, prev: Seq[String])(
+      body: Put => T): T = {
     val id = newest(spark, path).fold(0L)(_ + 1)
     var wrote = Vector.empty[String]
     val result = body { (table, rows) =>

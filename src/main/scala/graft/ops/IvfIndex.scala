@@ -61,7 +61,7 @@ object IvfIndex {
   def build(emb: DataFrame, path: String, k: Int = 4, iters: Int = 2): Unit = {
     val (cent, asg) = Similarity.lloydState(
       Similarity.asDoubles(emb).select(col("vec_id"), col("v")), k, iters)
-    IndexLog.replace(path) { put =>
+    IndexLog.replace(emb.sparkSession, path) { put =>
       put("centroids", cent)
       put("assign", asg.select(col("vec_id"), col("c"), col("d2")))
     }
@@ -78,7 +78,7 @@ object IvfIndex {
     * existing lists.
     */
   def append(spark: SparkSession, path: String, newVecs: DataFrame): DataFrame =
-    IndexLog.append(path)(_("assign", assignTo(centroids(spark, path), newVecs)))
+    IndexLog.append(spark, path)(_("assign", assignTo(centroids(spark, path), newVecs)))
 
   /** Codebook-staleness audit: refresh each centroid one Lloyd step from
     * the CURRENT lists (1e-12-snapped means, the trainer's discipline),

@@ -38,11 +38,11 @@ object SketchIndex {
 
   /** Build (or rebuild) the index from a full corpus. */
   def build(docs: DataFrame, path: String): Unit =
-    IndexLog.replace(path)(_("sketches", sourceSketches(docs)))
+    IndexLog.replace(docs.sparkSession, path)(_("sketches", sourceSketches(docs)))
 
   /** Fold a new document batch in: append its sketch rows — O(batch). */
   def appendDocs(docs: DataFrame, path: String): Unit =
-    IndexLog.append(path)(_("sketches", sourceSketches(docs)))
+    IndexLog.append(docs.sparkSession, path)(_("sketches", sourceSketches(docs)))
 
   /** The merged sketch table: one (source, sketch) row, the union over
     * every build/append batch.
@@ -54,7 +54,7 @@ object SketchIndex {
 
   /** Rewrite the index to its merged one-row-per-source form. */
   def compact(spark: SparkSession, path: String): Unit =
-    IndexLog.replace(path)(_("sketches", read(spark, path)))
+    IndexLog.replace(spark, path)(_("sketches", read(spark, path)))
 
   /** Distinct-token estimates per source from the index alone. */
   def estimates(spark: SparkSession, path: String): DataFrame =

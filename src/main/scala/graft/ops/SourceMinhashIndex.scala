@@ -28,13 +28,13 @@ object SourceMinhashIndex {
 
   /** Build (or rebuild) the index from a full corpus. */
   def build(docs: DataFrame, path: String, k: Int = 12): Unit =
-    IndexLog.replace(path)(_("sigs", Dedup.sourceSignatures(docs, k)))
+    IndexLog.replace(docs.sparkSession, path)(_("sigs", Dedup.sourceSignatures(docs, k)))
 
   /** Fold a new document batch into the index: append its signature rows.
     * Min-merge happens at read time, so this is write-only — O(batch).
     */
   def appendDocs(docs: DataFrame, path: String, k: Int = 12): Unit =
-    IndexLog.append(path)(_("sigs", Dedup.sourceSignatures(docs, k)))
+    IndexLog.append(docs.sparkSession, path)(_("sigs", Dedup.sourceSignatures(docs, k)))
 
   /** The merged signature table: one (source, salt, m) row per component,
     * the component-wise min over every build/append batch.
@@ -46,7 +46,7 @@ object SourceMinhashIndex {
 
   /** Rewrite the index to its merged form — one row per (source, salt). */
   def compact(spark: SparkSession, path: String): Unit =
-    IndexLog.replace(path)(_("sigs", read(spark, path)))
+    IndexLog.replace(spark, path)(_("sigs", read(spark, path)))
 
   /** Pairwise source similarity estimates from the index alone: matching
     * components / k (q278's est_j, without the exact-side audit). The join

@@ -18,7 +18,7 @@ object VecIndex {
 
   def build(emb: DataFrame, path: String, dim: Int = 64, nPlanes: Int = 32,
             nBands: Int = 4): Unit =
-    IndexLog.replace(path)(
+    IndexLog.replace(emb.sparkSession, path)(
       _("sigs", Similarity.srpSignatures(emb, dim, nPlanes, nBands)))
 
   def read(spark: SparkSession, path: String): DataFrame =
@@ -30,7 +30,7 @@ object VecIndex {
   def appendVecs(spark: SparkSession, path: String, newVecs: DataFrame,
                  dim: Int = 64, nPlanes: Int = 32, nBands: Int = 4,
                  minBands: Int = 1, maxBucket: Int = 1024): DataFrame =
-    IndexLog.append(path) { put =>
+    IndexLog.append(spark, path) { put =>
       val newSigs = put("sigs", Similarity.srpSignatures(newVecs, dim, nPlanes, nBands))
       IndexLog.bandedPairs(read(spark, path), newSigs, "vec", maxBucket)
     }.where(col("n_shared_bands") >= minBands)

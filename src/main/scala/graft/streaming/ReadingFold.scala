@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import scala.reflect.runtime.universe.TypeTag
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
   TimeMode, TimerValues, TTLConfig, ValueState}
@@ -97,7 +98,8 @@ private[streaming] final class DailyMean[S](
   * for a new key), walks the batch's readings in `replay` order through
   * `step`, stores the state under `stateName`, and emits whatever `step`
   * emitted followed by the end-of-batch `snapshot`. A key for which
-  * `params` has nothing is skipped and keeps no state.
+  * `params` has nothing is skipped and keeps no state; each micro-batch
+  * that drops its readings logs one WARN naming the key and the count.
   *
   * `replay` is the batch twin's window order: sorting each batch on it
   * makes every snapshot independent of where the micro-batch boundaries
@@ -111,7 +113,7 @@ final class ReadingFold[P, S <: Product : TypeTag, O](
     params: String => Option[P],
     step: (String, P, S, SensorReading, O => Unit) => S,
     snapshot: (String, P, S) => Option[O] = (_: String, _: P, _: S) => None)
-    extends StatefulProcessor[String, SensorReading, O] {
+    extends StatefulProcessor[String, SensorReading, O] with Logging {
 
   private val stateEncoder: Encoder[S] = Encoders.product[S]
   @transient private var st: ValueState[S] = _
@@ -124,7 +126,10 @@ final class ReadingFold[P, S <: Product : TypeTag, O](
       key: String,
       rows: Iterator[SensorReading],
       timerValues: TimerValues): Iterator[O] = params(key) match {
-    case None => rows.foreach(_ => ()); Iterator.empty
+    case None =>
+      logWarning(s"$stateName: no parameters for key '$key'; dropped " +
+        s"${rows.size} readings of this micro-batch")
+      Iterator.empty
     case Some(p) =>
       var s = if (st.exists()) st.get() else empty
       val out = Seq.newBuilder[O]

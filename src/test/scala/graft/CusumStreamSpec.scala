@@ -1,6 +1,14 @@
 package graft
 
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.LogEvent
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 
 import graft.streaming.{CusumParams, CusumSnapshot, CusumStream,
   SensorReading}
@@ -87,6 +95,33 @@ class CusumStreamSpec extends SparkSpec {
         assert(s.drifted == b.getAs[Boolean]("drifted"), s"drifted $k slicing $i")
       }
     }
+  }
+
+  test("a key missing from params is dropped loudly: one WARN per key and batch") {
+    val logger = LogManager.getLogger("graft.streaming.ReadingFold")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    val seen = new ConcurrentLinkedQueue[(Level, String)]()
+    val app = new AbstractAppender("cusum-skip", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getLevel -> e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    logger.addAppender(app)
+    val rs = readings
+    val out = try runSliced(Seq(rs.take(30), rs.drop(30)),
+      Map("a" -> CusumParams(5L, 10.0, 0.5)))
+    finally { logger.removeAppender(app); app.stop() }
+
+    assert(!out.contains("b"))
+    val skips = seen.asScala.toSeq.filter(_._2.contains("'b'"))
+    assert(skips.map(_._1).toSet == Set(Level.WARN), skips)
+    assert(skips.forall(_._2.startsWith("cusum: no parameters for key 'b'")), skips)
+    // one line per micro-batch that held b's readings, with their counts
+    val counts = skips.map(_._2.split("dropped ")(1).takeWhile(_.isDigit).toInt)
+    assert(counts.sorted == Seq(rs.take(30), rs.drop(30))
+      .map(_.count(_.event_type == "b")).filter(_ > 0).sorted, skips)
+    assert(!seen.asScala.exists(_._2.contains("'a'")))
   }
 
   test("foldDay walks the decimal CUSUM recursion with the batch tie rule") {

@@ -28,33 +28,33 @@ class IndexLogSpec extends SparkSpec {
   /** An index with table a = 0..2 and table b = 10..11. */
   private def built(): String = {
     val path = fresh()
-    IndexLog.replace(path) { put => put("a", rows(0, 3)); put("b", rows(10, 12)) }
+    IndexLog.replace(spark, path) { put => put("a", rows(0, 3)); put("b", rows(10, 12)) }
     path
   }
 
   test("an append that fails at its second table leaves both tables; a retry commits once") {
     val path = built()
-    intercept[Exception](IndexLog.append(path) { put =>
+    intercept[Exception](IndexLog.append(spark, path) { put =>
       put("a", rows(3, 5)); put("b", failing)
     })
     assert(ids(path, "a") === (0L until 3L))
     assert(ids(path, "b") === Seq(10L, 11L))
 
-    IndexLog.append(path) { put => put("a", rows(3, 5)); put("b", rows(12, 13)) }
+    IndexLog.append(spark, path) { put => put("a", rows(3, 5)); put("b", rows(12, 13)) }
     assert(ids(path, "a") === (0L until 5L))
     assert(ids(path, "b") === Seq(10L, 11L, 12L))
   }
 
   test("a failed replace keeps the old live set; a replace deletes superseded batches") {
     val path = built()
-    IndexLog.append(path)(_("a", rows(3, 4)))
-    intercept[Exception](IndexLog.replace(path) { put =>
+    IndexLog.append(spark, path)(_("a", rows(3, 4)))
+    intercept[Exception](IndexLog.replace(spark, path) { put =>
       put("a", rows(100, 101)); put("b", failing)
     })
     assert(ids(path, "a") === (0L until 4L))
     assert(ids(path, "b") === Seq(10L, 11L))
 
-    IndexLog.replace(path) { put => put("a", rows(7, 9)); put("b", rows(20, 21)) }
+    IndexLog.replace(spark, path) { put => put("a", rows(7, 9)); put("b", rows(20, 21)) }
     assert(ids(path, "a") === Seq(7L, 8L))
     assert(ids(path, "b") === Seq(20L))
     // on disk too: the superseded and the failed batches are gone, and the
@@ -68,7 +68,7 @@ class IndexLogSpec extends SparkSpec {
     val path = fresh()
     val unbuilt = intercept[IllegalStateException](IndexLog.read(spark, path, "a"))
     assert(unbuilt.getMessage.contains(path))
-    intercept[IllegalStateException](IndexLog.append(path)(_("a", rows(0, 1))))
+    intercept[IllegalStateException](IndexLog.append(spark, path)(_("a", rows(0, 1))))
 
     // an index in the flat pre-log layout is rejected the same way
     rows(0, 3).write.parquet(path)
