@@ -257,15 +257,18 @@ object Graph {
     * [[pageRankFixed]] and [[personalizedPageRank]]: returns the pinned
     * initial state and the round body.
     *
-    * The static sides are hash-partitioned ON THE PER-ROUND JOIN KEY
-    * before their one-time materialization: localCheckpoint preserves
-    * outputPartitioning, so no round re-exchanges the edge list or the
-    * degree table — only the inflow groupBy (mass moving along edges)
-    * shuffles. The rank state CARRIES deg (and the seed flag), so a round
-    * needs no state⋈degs join. (Measured dead end, guide §1: pinning
-    * EXPLICIT input-derived widths on e/degs/inflow — repartition(width,
-    * key) everywhere — read 1.2× WORSE on the q142/q160/q166 trio than
-    * letting AQE pick per-exchange counts.)
+    * The static sides are hash-partitioned ON THE PER-ROUND JOIN KEY at
+    * the session width and pinned by [[Materialize.state]], the one pin
+    * that keeps a partitioning (a plain localCheckpoint under AQE reports
+    * none, and a bare repartition(key) is coalesced, which no pin keeps),
+    * so a round joins the edge list and the degree table without
+    * re-exchanging them. The rank state CARRIES deg (and the seed flag),
+    * so a round needs no state⋈degs join. Against plain pins of bare
+    * repartitions this cut q142 from 89 to 76 jobs a pass and q166 from 73
+    * to 62, with wall time unchanged. (An older measurement read explicit
+    * widths on e/degs/inflow 1.2× WORSE on the q142/q160/q166 trio; it
+    * was taken while every pin dropped its partitioning, so the explicit
+    * widths only added exchanges.)
     *
     * Teleport: without seeds, every vertex gets (1−d)/n + d·dang/n; with
     * seeds, each seed gets (1−d)/|S| + d·dang/|S| and every other vertex
@@ -291,8 +294,8 @@ object Graph {
   private def pageRankSetup(edges: DataFrame, seeds: Option[DataFrame],
                             damping: Double): (DataFrame, DataFrame => DataFrame) = {
     val Array(srcCol, dstCol) = edges.columns
-    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .distinct().repartition(col("u")).localCheckpoint()
+    val e = Materialize.state(Relational.spread(
+      edges.select(col(srcCol).as("u"), col(dstCol).as("v")).distinct(), col("u")))
     val verts = e.select(col("u").as("id"))
       .union(e.select(col("v").as("id"))).distinct()
     val outDeg = e.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
@@ -300,7 +303,7 @@ object Graph {
     val withDeg = verts.join(outDeg, Seq("id"), "left")
     val (degs, start, teleport) = seeds match {
       case None =>
-        val degs = withDeg.repartition(col("id")).localCheckpoint()
+        val degs = Materialize.state(Relational.spread(withDeg, col("id")))
         val n = degs.count()
         (degs, lit(1.0 / n),
           lit((1.0 - damping) / n) + lit(damping) * col("dang") / lit(n))
@@ -309,10 +312,9 @@ object Graph {
           .localCheckpoint()
         val nS = sd.count()
         require(nS > 0, "personalizedPageRank needs a non-empty seed set")
-        val degs = withDeg
+        val degs = Materialize.state(Relational.spread(withDeg
           .join(sd.withColumn("seed", lit(true)), Seq("id"), "left")
-          .withColumn("seed", coalesce(col("seed"), lit(false)))
-          .repartition(col("id")).localCheckpoint()
+          .withColumn("seed", coalesce(col("seed"), lit(false))), col("id")))
         (degs, when(col("seed"), lit(1.0 / nS)).otherwise(lit(0.0)),
           when(col("seed"),
             lit((1.0 - damping) / nS) + lit(damping) * col("dang") / lit(nS))
@@ -500,18 +502,26 @@ object Graph {
     * (q172 with the weight, the rest the bare pair) — the per-order
     * self-join + support aggregate runs once per pass instead of once per
     * query (guide §2.4); the surviving edge list is small and pinned.
+    *
+    * The (order, part) rows are spread on the order key first, so the
+    * distinct and the per-order self-join both run inside each partition
+    * (the join's two sides share that one exchange) and the (u, v)
+    * support aggregate is the build's only other exchange. The `merge`
+    * hint keeps AQE from broadcasting the distinct side after its stage
+    * runs — one row per line item, a large hash relation for the driver
+    * to build and ship when the join needs no exchange at all.
     */
-  private def copurchaseEdgesWeighted(spark: SparkSession,
-                                      sfDir: String): DataFrame =
+  private[graft] def copurchaseEdgesWeighted(spark: SparkSession,
+                                             sfDir: String): DataFrame =
     SharedState.getOrBuild(spark, sfDir, "copurchaseEdges") {
       // distinct BEFORE the self-join: a part repeated across an order's
       // line items would otherwise fan the pair join out multiplicatively
       // and force a countDistinct de-dup inside the aggregate; on distinct
       // (order, part) rows every pair appears once per order, so plain
       // count() IS the support and the aggregate stays map-side-combinable
-      val li = Tables.lineitem(spark, sfDir)
-        .select("l_orderkey", "l_partkey").distinct()
-      li.as("a")
+      val li = Relational.spread(Tables.lineitem(spark, sfDir)
+        .select("l_orderkey", "l_partkey"), col("l_orderkey")).distinct()
+      li.as("a").hint("merge")
         .join(li.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
           col("a.l_partkey") < col("b.l_partkey"))
         .groupBy(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
@@ -672,12 +682,17 @@ object Graph {
     * and the argmax compares exact sums. Without it every edge weighs 1,
     * and the summed weight is exactly the neighbour count.
     *
-    * Per round: one join (neighbour label lookup — the symmetrized
-    * adjacency is pre-partitioned on the lookup key once, so only the
-    * label side exchanges), one (vertex, label) weight aggregate, and a
-    * per-vertex argmax window whose partition size is the vertex's
-    * DISTINCT neighbour-label count — bounded by degree, collapsing
-    * toward 1 as labels converge; never a global sort.
+    * Per round: one join (neighbour label lookup), one (vertex, label)
+    * weight aggregate, and a per-vertex argmax window whose partition
+    * size is the vertex's DISTINCT neighbour-label count — bounded by
+    * degree, collapsing toward 1 as labels converge; never a global sort.
+    * The symmetrized adjacency is hash-partitioned on the VOTING vertex
+    * `u` at an explicit width and pinned by [[Materialize.state]], which
+    * keeps that partitioning: the aggregate and the window are keyed on
+    * `u`, so neither exchanges. The label state's size is its stored
+    * bytes, so the planner broadcasts it when it is small and the
+    * round runs two jobs (the broadcast and the pin) with no shuffle; a
+    * large state falls back to a shuffle join that exchanges `sym` on `v`.
     *
     * @param edges  (src, dst[, weight]) BIGINT columns, undirected — each
     *               edge in one direction only.
@@ -690,11 +705,11 @@ object Graph {
     val Array(srcCol, dstCol, wCols @ _*) = edges.columns
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"),
       wCols.headOption.map(col).getOrElse(lit(1L)).as("wt"))
-    val sym = e.union(e.select(col("v").as("u"), col("u").as("v"), col("wt")))
-      .repartition(col("v")).localCheckpoint()
+    val sym = Materialize.state(Relational.spread(
+      e.union(e.select(col("v").as("u"), col("u").as("v"), col("wt"))), col("u")))
+    // on sym's u-partitioning: the distinct plans no exchange
     val labels = sym.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
-      .repartition(col("id")).localCheckpoint()
     val wArg = Window.partitionBy(col("u")).orderBy(col("c").desc, col("label"))
     Rounds.fixed(rounds, labels) { (labels, _) =>
       sym.join(labels, sym("v") === labels("id"))
@@ -908,7 +923,10 @@ object Graph {
     *
     * Per round: two shuffles (authority sum keyed on dst, hub sum keyed on
     * src) and one broadcast one-row max join each — no driver action, no
-    * collect; state is one row per vertex side.
+    * collect; state is one row per vertex side. The edge list stays a
+    * plain pin of a bare repartition: pinned at the session width by
+    * [[Materialize.state]] it ran q160 in the same 59 jobs a pass but
+    * 1.24× slower (same-JVM median 6.71 → 8.33 s at sf0.1).
     *
     * @param edges (src, dst) BIGINT pairs, already distinct.
     * @return (id, side, score): side ∈ {hub, authority}, score ∈ (0, 1].

@@ -21,9 +21,11 @@ object Relational {
     * spark.sql.shuffle.partitions, so it scales with the session rather
     * than a local constant; on a splittable production layout the scan is
     * already wide and the extra exchange of the projected slice is the
-    * bounded cost documented in OPTIMIZATION_r12.md.
+    * bounded cost documented in OPTIMIZATION_r12.md. The width is explicit,
+    * so AQE does not coalesce the exchange, and [[Materialize.state]] keeps
+    * the hash partitioning of a spread it pins.
     */
-  private def spread(df: DataFrame, key: Column): DataFrame =
+  private[ops] def spread(df: DataFrame, key: Column): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, key)
 
   /** q13: pricing summary (TPC-H Q1 shape) — one shuffle, map-side combine.

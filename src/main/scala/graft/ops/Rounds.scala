@@ -9,15 +9,18 @@ import scala.annotation.tailrec
   *
   * Each operator supplies its round body as a plain DataFrame → DataFrame
   * step; the loop owns the state carry and the per-round materialization.
-  * Every round's result is pinned with `localCheckpoint()` (eager, default
-  * storage level), which truncates lineage so the plan stays O(1) deep at
-  * any round count and keeps the checkpointed plan's output partitioning.
-  * The initial state is the caller's: it is passed in as built, pinned or
-  * not, and never re-materialized here.
+  * Every round's result is pinned with [[Materialize.state]] (an eager
+  * `localCheckpoint()`, default storage level), which truncates lineage so
+  * the plan stays O(1) deep at any round count. The pin declares the
+  * state's stored bytes as its size, so the next round broadcasts a small
+  * state statically, and it keeps the round plan's hash partitioning
+  * when that has an explicit width (a plain `localCheckpoint()` under
+  * AQE does neither). The initial state is the caller's: it is passed in
+  * as built, pinned or not, and never re-materialized here.
   */
 object Rounds {
 
-  private def pin(df: DataFrame): DataFrame = df.localCheckpoint()
+  private def pin(df: DataFrame): DataFrame = Materialize.state(df)
 
   /** Runs `step(state, round)` for rounds 1..n, pinning each result. */
   def fixed(n: Int, init: DataFrame)(step: (DataFrame, Int) => DataFrame): DataFrame =

@@ -1388,7 +1388,10 @@ object Similarity {
     val none = rel.limit(0)
       .select(col("vec_id"), lit(0.0).as("score"), lit(0).as("rnk"))
     Rounds.fixed(k, none) { (selected, step) =>
-      val maxSim = sims.join(selected.select(col("vec_id").as("b")), "b")
+      // a semi join: selected ids are distinct, and an inner join's size
+      // estimate (the product of its sides) would grow with the state
+      val maxSim = sims
+        .join(selected.select(col("vec_id").as("b")), Seq("b"), "left_semi")
         .groupBy(col("a")).agg(max(col("sim")).as("ms"))
       val next = rel
         .join(selected.select(col("vec_id")), Seq("vec_id"), "left_anti")

@@ -1,8 +1,14 @@
 package graft
 
 import graft.ops.Graph
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.graft.Listeners
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
-class GraphSpec extends SparkSpec {
+class GraphSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def components(edges: Seq[(Long, Long)]): Map[Long, Long] =
@@ -191,6 +197,42 @@ class GraphSpec extends SparkSpec {
     val got = Graph.labelPropagation(edges.toDF("src", "dst"), rounds = 3)
       .as[(Long, Long)].collect().toMap
     assert(got === referenceLpa(edges, 3))
+  }
+
+  test("a labelPropagation round plans no shuffle exchange") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val edges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (3L, 4L, 5L),
+      (4L, 5L, 1L), (5L, 6L, 2L), (6L, 4L, 4L)).toDF("src", "dst", "w")
+    Listeners.drain(spark)
+    spark.listenerManager.register(l)
+    val got = try {
+      val r = Graph.labelPropagation(edges, rounds = 3).as[(Long, Long)].collect().toMap
+      Listeners.drain(spark)
+      r
+    } finally spark.listenerManager.unregister(l)
+    assert(got === referenceWeightedLpa(edges.as[(Long, Long, Long)].collect().toSeq, 3))
+    plans.asScala.toSeq.takeRight(3).foreach { p =>
+      assert(collect(p) { case x: ShuffleExchangeExec => x }.isEmpty, p.toString)
+    }
+    // the adjacency pin, then one pin per round
+    assert(plans.size === 4)
+  }
+
+  test("co-purchase support counts an order once when it repeats a part") {
+    // order 1 lists part 2 on three line items, order 4 lists part 3 twice
+    val dir = java.nio.file.Files.createTempDirectory("graft_copurchase").toString
+    Seq((1L, 1L), (1L, 2L), (1L, 2L), (1L, 2L), (2L, 1L), (2L, 2L),
+      (3L, 1L), (3L, 2L), (3L, 3L), (4L, 3L), (4L, 1L), (4L, 3L))
+      .toDF("l_orderkey", "l_partkey").write.parquet(s"$dir/lineitem.parquet")
+    val got = Graph.copurchaseEdgesWeighted(spark, dir)
+      .as[(Long, Long, Long)].collect().toSet
+    // (1,2): orders 1-3; (1,3): orders 3-4; (2,3): order 3 only, below 2
+    assert(got === Set((1L, 2L, 3L), (1L, 3L, 2L)))
   }
 
   // plain-Scala synchronous LPA whose vote is the summed edge weight
