@@ -9,6 +9,8 @@ class GraftSessionSpec extends SparkSpec {
     assert(conf.sessionLocalTimeZone === "UTC")
     assert(conf.stateStoreProviderClass ===
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    assert(spark.conf.get(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") === "true")
     val row = spark.sql(
       "SELECT decimal_dot(array(0.1D, 0.2D), array(0.3D, 0.4D)) d, " +
         "size(rolling_hash('abcdefghij', 4)) n").head()
