@@ -5,15 +5,14 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import graft.functions.{DecimalDotExpr, RollingHashExpr}
+import org.apache.spark.sql.graft.PinnedScan
 
 /** Engine extension point, wired via `spark.sql.extensions=graft.GraftExtensions`.
   *
   * Registers the engine's native expressions into the session's function
   * registry so they resolve in both the Column API (`call_function`) and raw
-  * SQL. This is the standard injection seam — custom optimizer rules and
-  * planner strategies would be added here too (injectOptimizerRule /
-  * injectPlannerStrategy) as the engine grows operators Catalyst can't
-  * express.
+  * SQL, and plans pins that keep a partitioning through `PinnedScan`. This
+  * is the standard injection seam for rules and planner strategies.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -44,5 +43,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("might_contain"),
       new ExpressionInfo(classOf[BloomFilterMightContain].getName, "might_contain"),
       (children: Seq[Expression]) => BloomFilterMightContain(children.head, children(1))))
+    ext.injectPlannerStrategy(_ => PinnedScan)
   }
 }

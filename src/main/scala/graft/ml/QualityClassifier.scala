@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.ops.Materialize
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.feature.{HashingTF, IDF, RegexTokenizer}
@@ -90,7 +91,7 @@ object QualityClassifier {
     val folded = labeled.withColumn("fold",
       pmod(conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long"), lit(k)).cast("int"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     // ONE up-front action for all fold sizes (n_train(f) = total − size(f))
     // instead of a per-fold train.count(): halves the job count per fold.
     val foldSizes = folded.groupBy(col("fold")).agg(count(lit(1)).as("c"))

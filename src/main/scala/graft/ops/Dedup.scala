@@ -62,7 +62,7 @@ object Dedup {
     */
   private[ops] def shinglesFor(spark: SparkSession, sfDir: String): DataFrame =
     SharedState.getOrBuild(spark, sfDir, "shingles:3") {
-      shingles(Tables.documents(spark, sfDir)).localCheckpoint()
+      Materialize.state(shingles(Tables.documents(spark, sfDir)))
     }
 
   /** q20: exact dedup — md5 of normalized text, keep-first (min doc_id) per
@@ -485,7 +485,7 @@ object Dedup {
 
   private def jaccardThresholdSweepFrom(spark: SparkSession,
                                         capped: DataFrame): DataFrame = {
-    val pairs = capped.select(col("jaccard")).localCheckpoint()
+    val pairs = capped.select(col("jaccard"))
     val grid = spark.range(3, 10)
       .select((col("id").cast("double") / 10.0).as("threshold"))
     val counts = pairs.crossJoin(broadcast(grid))
@@ -545,7 +545,7 @@ object Dedup {
                                         sfDir: String): DataFrame =
     SharedState.getOrBuild(spark, sfDir, "minhashSig:12") {
       minhashSignaturesFromSh(shinglesFor(spark, sfDir), 12)
-        .localCheckpoint()
+        .transform(Materialize.state(_))
     }
 
   /** (doc_id, band, sig): one row per document per LSH band; the band
@@ -1056,7 +1056,7 @@ object Dedup {
     */
   private def simhashPairsFor(spark: SparkSession, sfDir: String): DataFrame =
     SharedState.getOrBuild(spark, sfDir, "simhashPairs:3:4:15") {
-      simhashPairs(Tables.documents(spark, sfDir)).localCheckpoint()
+      Materialize.state(simhashPairs(Tables.documents(spark, sfDir)))
     }
 
   /** q24: embedding-cosine near-dup pairs, blocked by the cluster label so
@@ -1116,7 +1116,7 @@ object Dedup {
     SharedState.getOrBuild(spark, sfDir, "minhashPairs:12:3:64") {
       minhashLshFromSized(
         sizedFromSig(minhashSignaturesFor(spark, sfDir), 12, 3), 64)
-        .localCheckpoint()
+        .transform(Materialize.state(_))
     }
 
   /** One lossless prefix-filtered exact-Jaccard pair table (minJaccard
@@ -1128,7 +1128,7 @@ object Dedup {
   private def jacPrefixFor(spark: SparkSession, sfDir: String): DataFrame =
     SharedState.getOrBuild(spark, sfDir, "jacPrefix:0.5") {
       ngramJaccardPrefixFromSh(shinglesFor(spark, sfDir), 0.5)
-        .localCheckpoint()
+        .transform(Materialize.state(_))
     }
 
   def dupClusters(docs: DataFrame): DataFrame =
@@ -1710,14 +1710,14 @@ object Dedup {
       .withColumn("side",
         when(col("u24") < cut, lit("train")).otherwise(lit("eval")))
       .select(col("doc_id"), col("side"), col("n_tok"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val cat = jacPairs
       .select(col("doc_a"), col("doc_b"))
       .join(sides.select(col("doc_id").as("doc_a"), col("side").as("sa")),
         "doc_a")
       .join(sides.select(col("doc_id").as("doc_b"), col("side").as("sb")),
         "doc_b")
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val counts = cat.agg(
       count(lit(1)).as("n_pairs"),
       sum(when(col("sa") === "train" && col("sb") === "train", 1L)
@@ -1766,7 +1766,6 @@ object Dedup {
 
   private def dupTransitivityFrom(lshPairs: DataFrame): DataFrame = {
     val pairs = lshPairs.select(col("doc_a"), col("doc_b"))
-      .localCheckpoint()
     val adj = pairs.select(col("doc_a").as("m"), col("doc_b").as("x"))
       .unionAll(pairs.select(col("doc_b").as("m"), col("doc_a").as("x")))
     val wedges = adj.join(adj.toDF("m", "y"), "m")
@@ -1826,7 +1825,7 @@ object Dedup {
     sigsFromShingles(sourceShingles(docs), k)
 
   def sourceMinhash(docs: DataFrame, k: Int = 12): DataFrame = {
-    val srcSh = sourceShingles(docs).localCheckpoint()
+    val srcSh = Materialize.state(sourceShingles(docs))
     val sizes = srcSh.groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
     val inter = srcSh.toDF("src_a", "sh")
       .join(srcSh.toDF("src_b", "sh"), "sh")

@@ -79,7 +79,7 @@ object Drift {
     // re-expands the whole upstream subtree (fact scan included) into the
     // plan; the checkpoint also de-conflicts attribute ids when the input
     // is a re-read table (the streaming-monitor path).
-    val counts = countsIn.localCheckpoint()
+    val counts = Materialize.state(countsIn)
     val totals = counts.groupBy(col("event_type"), col("phase"))
       .agg(sum(col("c")).as("total"))
     val types = counts.select(col("event_type")).distinct()
@@ -117,9 +117,7 @@ object Drift {
   def driftPsi(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_type"), epochS(col("ts")).as("e"), col("value"))
-    // two consumers (binning join + grid) — materialize the tiny dimension
-    val dim = dimension(ev).localCheckpoint()
-    val counts = binning(ev, dim)
+    val counts = binning(ev, dimension(ev))
       .groupBy(col("event_type"), col("phase"), col("bin"))
       .agg(count(lit(1)).as("c"))
     psiFromCounts(counts)
@@ -397,13 +395,9 @@ object Drift {
     // two phase consumers + self-joins inside the count-and-locate engine:
     // materialize the distinct-value-sized aggregate once (the
     // psiFromCounts idiom — it also de-conflicts attribute ids when the
-    // input is a re-read memory-sink table on the streaming path).
-    // DISK_ONLY, not the default MEMORY_AND_DISK: for continuous-valued
-    // series the distinct-(series,value) table is near corpus-sized, and
-    // heap-pinned checkpoint blocks starve broadcast builds (the
-    // Similarity.diskCheckpoint policy — heap is the scarce resource).
-    val cnts = cntsIn.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    // input is a re-read memory-sink table on the streaming path), on disk:
+    // for continuous-valued series it is near corpus-sized (see Materialize)
+    val cnts = Materialize.state(cntsIn, onDisk = true)
     def quantilesOf(cc: org.apache.spark.sql.Column, suffix: String): DataFrame =
       Percentiles.exactQuantilesFromCounts(
         cnts.select(col("event_type"), col("value"), cc.as("cnt")),

@@ -57,11 +57,11 @@ object Graph {
     val Array(srcCol, dstCol) = edges.columns
     val raw = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
     val verts = raw.select(col("u").as("id"))
-      .union(raw.select(col("v").as("id"))).distinct().localCheckpoint()
+      .union(raw.select(col("v").as("id"))).distinct()
     val e0 = raw.where(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
-      .distinct().localCheckpoint()
+      .distinct().transform(Materialize.state(_))
 
     val stars = if (e0.isEmpty) e0 else Rounds.untilConverged(maxIters, e0) { e =>
       // large-star over the symmetrized adjacency
@@ -104,7 +104,7 @@ object Graph {
     * vertices is strictly monotone decreasing until fixpoint — convergence
     * is detected with a single cheap aggregate per round (decimal(38,0):
     * no overflow at any vertex-id scale), not a change-count self-join.
-    * Each round's result is localCheckpoint'ed to truncate lineage,
+    * Each round's result is pinned to truncate lineage,
     * keeping the plan O(1) deep regardless of round count.
     *
     * @param edges two BIGINT columns (src, dst), undirected semantics —
@@ -144,7 +144,7 @@ object Graph {
     // q76 paying its 17 s candidate build twice). The converged path does
     // the same total work as before: one upstream evaluation, now into the
     // pinned frame instead of straight into the adjacency build.
-    val pinned = edges.localCheckpoint()
+    val pinned = Materialize.state(edges)
     minLabelCore(pinned, trialRounds)
       .getOrElse(connectedComponents(pinned, maxIters))
   }
@@ -155,11 +155,11 @@ object Graph {
     // materialize the adjacency ONCE — without this every propagation round
     // would re-execute the whole upstream edge-producing pipeline (for LSH
     // input that's the full shingle->minhash->band DAG per round)
-    val adj = e.union(e.select(col("v"), col("u"))).distinct().localCheckpoint()
+    val adj = e.union(e.select(col("v"), col("u"))).distinct().transform(Materialize.state(_))
 
     val labels = adj.select(col("u").as("id")).distinct()
       .withColumn("comp", col("id"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     Rounds.untilConverged(maxIters, labels) { labels =>
       val nbrMin = adj
         .join(labels.withColumnRenamed("id", "v"), "v")
@@ -258,9 +258,9 @@ object Graph {
     * initial state and the round body.
     *
     * The static sides are hash-partitioned ON THE PER-ROUND JOIN KEY at
-    * the session width and pinned by [[Materialize.state]], the one pin
-    * that keeps a partitioning (a plain localCheckpoint under AQE reports
-    * none, and a bare repartition(key) is coalesced, which no pin keeps),
+    * the session width and pinned by [[Materialize.state]], which keeps
+    * that partitioning (a bare repartition(key) is coalesced, which no
+    * pin keeps),
     * so a round joins the edge list and the degree table without
     * re-exchanging them. The rank state CARRIES deg (and the seed flag),
     * so a round needs no state⋈degs join. Against plain pins of bare
@@ -309,7 +309,7 @@ object Graph {
           lit((1.0 - damping) / n) + lit(damping) * col("dang") / lit(n))
       case Some(s) =>
         val sd = s.select(col(s.columns.head).as("id")).distinct()
-          .localCheckpoint()
+          .transform(Materialize.state(_))
         val nS = sd.count()
         require(nS > 0, "personalizedPageRank needs a non-empty seed set")
         val degs = Materialize.state(Relational.spread(withDeg
@@ -333,7 +333,7 @@ object Graph {
         .select(static :+ (teleport
           + lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"): _*)
     }
-    (degs.select(static :+ start.as("rank"): _*).localCheckpoint(), round)
+    (Materialize.state(degs.select(static :+ start.as("rank"): _*)), round)
   }
 
   /** q166: suppliers closest to the top customers — personalized PageRank
@@ -397,7 +397,6 @@ object Graph {
           (col("du") === col("dv") && col("u") < col("v")), struct(col("u").as("a"), col("v").as("b")))
           .otherwise(struct(col("v").as("a"), col("u").as("b"))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
-      .localCheckpoint()
     // wedges a→b, a→c (both leg orders kept): the closing edge b→c exists in
     // exactly ONE orientation, so the semi-join keeps each triangle once —
     // at its lowest-(deg, id) apex, with legs in orientation order
@@ -458,7 +457,7 @@ object Graph {
     * checkpointed so lineage stays flat.
     */
   def ktrussPeel(edges: DataFrame, k: Int = 4, rounds: Int = 3): DataFrame = {
-    var e = edges.localCheckpoint()
+    var e = Materialize.state(edges)
     var prevN = e.agg(count(lit(1)).as("n_prev"))
     var out: DataFrame = null
     for (r <- 1 to rounds) {
@@ -467,7 +466,7 @@ object Graph {
         .join(e.as("p3"),
           col("p3.u") === col("p1.u") && col("p3.v") === col("p2.v"))
         .select(col("p1.u").as("a"), col("p1.v").as("b"), col("p2.v").as("c"))
-        .localCheckpoint()
+        .transform(Materialize.state(_))
       val sup = tri.select(col("a").as("u"), col("b").as("v"))
         .unionAll(tri.select(col("b").as("u"), col("c").as("v")))
         .unionAll(tri.select(col("a").as("u"), col("c").as("v")))
@@ -475,7 +474,7 @@ object Graph {
       e = e.join(sup, Seq("u", "v"), "left")
         .where(coalesce(col("sup"), lit(0L)) >= k - 2)
         .select(col("u"), col("v"))
-        .localCheckpoint()
+        .transform(Materialize.state(_))
       val row = tri.agg(count(lit(1)).as("n_tri"))
         .crossJoin(e.agg(count(lit(1)).as("n_edges")))
         .crossJoin(prevN)
@@ -529,7 +528,7 @@ object Graph {
         .where(col("supp") >= 2)
         .select(col("u").cast("bigint"), col("v").cast("bigint"),
           col("supp").cast("bigint"))
-        .localCheckpoint()
+        .transform(Materialize.state(_))
     }
 
   /** One distinct (customer, supplier) purchase-pair table per (session,
@@ -545,7 +544,7 @@ object Graph {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").cast("bigint").as("src"),
           col("l_suppkey").cast("bigint").as("dst"))
-        .distinct().localCheckpoint()
+        .distinct().transform(Materialize.state(_))
     }
 
   /** Distributed k-core decomposition (coreness per vertex) by h-index
@@ -575,9 +574,9 @@ object Graph {
     val raw = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .where(col("u") =!= col("v"))
     val adj = raw.union(raw.select(col("v"), col("u"))).distinct()
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val c0 = adj.groupBy(col("u").as("id")).agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     Rounds.untilConverged(maxIters, c0) { c =>
       val nbr = adj.join(c.withColumnRenamed("id", "v")
         .withColumnRenamed("c", "nc"), "v")
@@ -881,7 +880,6 @@ object Graph {
   def jaccardNeighbors(edges: DataFrame, topK: Int, apexDegCap: Int): DataFrame = {
     val Array(srcCol, dstCol) = edges.columns
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .localCheckpoint()
     val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
     val deg = sym.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
     val adj = sym.join(deg.where(col("deg") <= apexDegCap)
@@ -923,10 +921,9 @@ object Graph {
     *
     * Per round: two shuffles (authority sum keyed on dst, hub sum keyed on
     * src) and one broadcast one-row max join each — no driver action, no
-    * collect; state is one row per vertex side. The edge list stays a
-    * plain pin of a bare repartition: pinned at the session width by
-    * [[Materialize.state]] it ran q160 in the same 59 jobs a pass but
-    * 1.24× slower (same-JVM median 6.71 → 8.33 s at sf0.1).
+    * collect; state is one row per vertex side. The edge list's bare
+    * repartition is AQE-coalesced, so its pin keeps only its true size: at
+    * the session width it ran q160 1.24× slower (same-JVM, sf0.1).
     *
     * @param edges (src, dst) BIGINT pairs, already distinct.
     * @return (id, side, score): side ∈ {hub, authority}, score ∈ (0, 1].
@@ -934,7 +931,7 @@ object Graph {
   def hits(edges: DataFrame, rounds: Int = 4): DataFrame = {
     val Array(srcCol, dstCol) = edges.columns
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .repartition(col("src")).localCheckpoint()
+      .repartition(col("src")).transform(Materialize.state(_))
     val snap = (c: org.apache.spark.sql.Column) =>
       (round(c * lit(1e9)) / lit(1e9)).cast("decimal(28,12)")
     var hubs = e.select(col("src").as("id")).distinct()
@@ -948,7 +945,7 @@ object Graph {
         .select(col("id"),
           snap(col("raw").cast("double") / col("mx").cast("double"))
             .as("score"))
-        .localCheckpoint()
+        .transform(Materialize.state(_))
       val hraw = e.join(auths, e("dst") === auths("id"))
         .groupBy(col("src").as("id")).agg(sum(col("score")).as("raw"))
       val hmax = hraw.agg(max(col("raw")).as("mx"))
@@ -956,7 +953,7 @@ object Graph {
         .select(col("id"),
           snap(col("raw").cast("double") / col("mx").cast("double"))
             .as("score"))
-        .localCheckpoint()
+        .transform(Materialize.state(_))
     }
     hubs.select(col("id"), lit("hub").as("side"), col("score"))
       .union(auths.select(col("id"), lit("authority").as("side"), col("score")))
@@ -1049,9 +1046,8 @@ object Graph {
     val Array(srcCol, dstCol) = edges.columns
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
     val adj = e.union(e.select(col("v"), col("u"))).distinct()
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val reach = source.toDF("id").withColumn("dist", lit(0))
-      .localCheckpoint()
     Rounds.fixed(maxHops, reach) { (reach, h) =>
       val next = adj.join(reach.where(col("dist") === h - 1)
           .withColumnRenamed("id", "u"), "u")

@@ -4,8 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.AttributeSet
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, PartitioningCollection}
 import org.apache.spark.sql.graft.PinnedRelation
+import org.apache.spark.storage.StorageLevel
 
-/** Pins that keep what the checkpoint knows.
+/** The one pin: every checkpoint graft's operators take goes through here.
   *
   * `localCheckpoint()` under AQE forgets two facts about the rows it
   * pins. Its relation takes the partitioning of the ADAPTIVE plan node,
@@ -15,25 +16,32 @@ import org.apache.spark.sql.graft.PinnedRelation
   * rows (a self-join's estimate, say), so the planner never broadcasts a
   * small pinned state statically: AQE must first run a shuffle stage to
   * learn its real size.
+  *
+  * Blocks stay in memory (disk on eviction) unless `onDisk`: state that
+  * grows with the corpus pins to disk, because at the sf100 rehearsal
+  * (BASELINE_sf100.md) heap-pinned corpus×d PQ tables starved the
+  * broadcast builds their joins need. Heap is scarce at scale, disk is not.
   */
 object Materialize {
 
-  /** `df.localCheckpoint()` — same job, blocks and storage level — whose
-    * relation declares:
+  /** `df.localCheckpoint()` — same job and blocks; disk-only blocks when
+    * `onDisk` — whose relation declares:
     *   - the final physical plan's `HashPartitioning`, when its width
     *     equals the checkpoint's partition count. Only an EXPLICIT width
     *     (`repartition(n, key)`) survives: AQE coalesces a bare
     *     `repartition(key)`, and a coalesced read is not a hash
     *     partitioning. Otherwise Spark's own value stays;
     *   - the bytes its blocks hold as `sizeInBytes`, falling back to
-    *     Spark's statistics when a block is missing. Pins sized this way
-    *     compare with each other in one unit (deserialized rows), so a
-    *     round's state and its static side pick the right build side;
-    *     an estimate — the product of a join's sides, or a compressed
-    *     file's bytes — compares with neither.
+    *     Spark's statistics when a block is missing: the estimated size
+    *     of the deserialized rows in memory, or the serialized bytes of an
+    *     `onDisk` pin (usually fewer for the same rows). Memory pins thus
+    *     compare in one unit, so a round's state and its static side pick
+    *     the right build side; an estimate — the product of a join's
+    *     sides, or a compressed file's bytes — compares with neither.
     */
-  def state(df: DataFrame): DataFrame = {
-    val pinned = df.localCheckpoint()
+  def state(df: DataFrame, onDisk: Boolean = false): DataFrame = {
+    val pinned = if (onDisk) df.localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
+      else df.localCheckpoint()
     val lr = PinnedRelation.relation(pinned)
     // the relation's output carries the plan's attribute ids (Spark's own
     // checkpoint relies on that); a key outside it is not kept

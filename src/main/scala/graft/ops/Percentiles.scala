@@ -39,16 +39,14 @@ object Percentiles {
     // NULLs are excluded up front: Catalyst `percentile` and DuckDB
     // `quantile_cont` both ignore NULL values, and counting them into n
     // would shift every rank.
-    // The counts table is materialized ONCE (DISK_ONLY — for continuous
-    // values it is near corpus-sized, and heap-pinned blocks starve
-    // broadcast builds; the Drift/Similarity checkpoint policy): the
-    // engine reads it from three branches (stats, bucketing, the located
-    // slice), which otherwise re-run the whole upstream scan+aggregate
-    // per branch.
+    // The counts table is materialized ONCE, on disk (for continuous values
+    // it is near corpus-sized; see Materialize): the engine reads it from
+    // three branches (stats, bucketing, the located slice), which otherwise
+    // re-run the whole upstream scan+aggregate per branch.
     exactQuantilesFromCounts(
-      df.where(col(valueCol).isNotNull)
-        .groupBy(col(groupCol), col(valueCol)).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY),
+      Materialize.state(df.where(col(valueCol).isNotNull)
+        .groupBy(col(groupCol), col(valueCol)).agg(count(lit(1)).as("cnt")),
+        onDisk = true),
       groupCol, valueCol, "cnt", qs, nBuckets)
 
   /** [[exactQuantiles]] when the caller already holds the distinct

@@ -24,10 +24,10 @@ import org.apache.spark.sql.functions._
   * samples its boundaries with an RDD-id-derived seed — two independent
   * re-executions of the exchange can disagree on boundaries, which would
   * tear the pid↔offset correspondence (observed: nondeterministic decile
-  * counts at sf0.1). So the bucketed frame is localCheckpoint'ed: ONE
-  * materialization of the bounded aggregate, both consumers read the same
-  * frozen buckets. (Same idiom as Graph's iterative state; on a real
-  * cluster swap in reliable checkpointing if executor loss matters.)
+  * counts at sf0.1). So the bucketed frame is pinned by
+  * [[Materialize.state]]: ONE materialization of the bounded aggregate,
+  * both consumers read the same frozen buckets. (A local pin does not
+  * survive a lost executor; ROADMAP item 9 owns that.)
   */
 object Prefix {
 
@@ -56,7 +56,7 @@ object Prefix {
     val pid = "__prefix_pid"
     val bucketed = df.repartitionByRange(buckets, order: _*)
       .withColumn(pid, spark_partition_id())
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val totalCols = aggs.map(a => fnOf(a)(a.value).as(s"__t_${a.out}"))
     val totals = bucketed.groupBy(col(pid))
       .agg(totalCols.head, totalCols.tail: _*)

@@ -51,7 +51,7 @@ object Recommend {
     // shuffled joins over the same rows)
     val histLi = histOrders.join(li, "okey")
       .select(col("cust"), col("okey"), col("part"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val hist = histLi.select(col("cust"), col("part")).distinct()
     val users = hist.select(col("cust")).distinct()
 
@@ -106,7 +106,7 @@ object Recommend {
     SharedState.getOrBuild(spark, sfDir, "recPipeline:20:10") {
       val (u, t, r) = recPipeline(Tables.orders(spark, sfDir),
         Tables.lineitem(spark, sfDir), 20, 10)
-      (u.localCheckpoint(), t.localCheckpoint(), r.localCheckpoint())
+      (Materialize.state(u), Materialize.state(t), Materialize.state(r))
     }
 
   def itemKnnEval(orders: DataFrame, lineitem: DataFrame,
@@ -157,7 +157,7 @@ object Recommend {
                   nNbr: Int = 20, topK: Int = 10): DataFrame = {
     val (u, t, r) = recPipeline(orders, lineitem, nNbr, topK)
     // pin rec: both the exposure rollup and the user count re-read it
-    recCoverageFrom(lineitem, (u, t, r.localCheckpoint()))
+    recCoverageFrom(lineitem, (u, t, Materialize.state(r)))
   }
 
   private def recCoverageFrom(lineitem: DataFrame,

@@ -70,7 +70,7 @@ object Regression {
     graft.ops.SharedState.getOrBuild(spark, sfDir, s"logitFit:$iters") {
       val xy = logisticXy(graft.Tables.events(spark, sfDir))
         .repartition(spark.sessionState.conf.numShufflePartitions, col("x"))
-        .localCheckpoint()
+        .transform(Materialize.state(_))
       (xy, fitLogistic(xy, iters))
     }
 
@@ -335,7 +335,6 @@ object Regression {
       .agg(count(lit(1)).as("n"),
         sum(col("y")).as("sy"),
         sum((col("y") * col("y")).cast("decimal(38,6)")).as("syy"))
-      .localCheckpoint()
     val w = Window.orderBy(col("q"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
@@ -362,7 +361,7 @@ object Regression {
         .select(col("q").as("t"), col("ml"), col("mr"), col("sse"))
     }
 
-    val r1 = bestSplit(perQ).localCheckpoint()
+    val r1 = bestSplit(perQ)
     // residual sufficient statistics after applying nu * round-1 stump
     val perQ2 = perQ.crossJoin(broadcast(r1))
       .withColumn("pred", snap12(
@@ -413,7 +412,6 @@ object Regression {
         col("o_totalprice").cast("decimal(18,2)").as("y"))
       .groupBy(col("cat"), col("fold"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"))
-      .localCheckpoint()
     val perCat = cells.groupBy(col("cat"))
       .agg(sum(col("n")).as("cn"), sum(col("sy")).as("csy"))
     val global = cells.agg(

@@ -186,7 +186,7 @@ object Relational {
       .select(col("src"), col("dst"),
         (round((col("n").cast("double") / col("tot").cast("double"))
           * lit(1e12)) / lit(1e12)).as("p"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val k = p.select(col("src")).distinct().count()
     var pi = p.select(col("src").as("state")).distinct()
       .withColumn("pi", lit(1.0) / lit(k.toDouble))
@@ -228,7 +228,7 @@ object Relational {
       .select(col("src"), col("dst"),
         (round((col("n").cast("double") / col("tot").cast("double"))
           * lit(1e12)) / lit(1e12)).as("p"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val states = p.select(col("src").as("state")).distinct()
     var t = states.withColumn("t", lit(0.0))
     for (_ <- 1 to rounds) {

@@ -44,7 +44,7 @@ object Retrieval {
     */
   private def postingsFor(spark: SparkSession, sfDir: String): DataFrame =
     SharedState.getOrBuild(spark, sfDir, "postings") {
-      postings(Tables.documents(spark, sfDir)).localCheckpoint()
+      Materialize.state(postings(Tables.documents(spark, sfDir)))
     }
 
   def bm25TopK(docs: DataFrame, nProbes: Int = 5, k: Int = 5,
@@ -360,7 +360,6 @@ object Retrieval {
       .join(dfreq, "tok")
       .join(dl, "doc_id")
       .crossJoin(broadcast(stats))
-      .localCheckpoint()
     val cfgArr = array(configs.map { case (k1, b) =>
       struct(lit(k1).as("k1"), lit(b).as("b"))
     }: _*)

@@ -9,22 +9,19 @@ import scala.annotation.tailrec
   *
   * Each operator supplies its round body as a plain DataFrame → DataFrame
   * step; the loop owns the state carry and the per-round materialization.
-  * Every round's result is pinned with [[Materialize.state]] (an eager
-  * `localCheckpoint()`, default storage level), which truncates lineage so
-  * the plan stays O(1) deep at any round count. The pin declares the
-  * state's stored bytes as its size, so the next round broadcasts a small
-  * state statically, and it keeps the round plan's hash partitioning
-  * when that has an explicit width (a plain `localCheckpoint()` under
-  * AQE does neither). The initial state is the caller's: it is passed in
-  * as built, pinned or not, and never re-materialized here.
+  * Every round's result is pinned with [[Materialize.state]], which
+  * truncates lineage (the plan stays O(1) deep at any round count),
+  * declares the state's stored bytes, so a small state broadcasts
+  * statically, and keeps an explicit-width hash partitioning. The initial
+  * state is the caller's, passed in as built and never re-pinned here.
+  * Loops carrying several frames a round (HITS, k-truss, k-center, BPE
+  * merges, median polish) stay hand-written and pin the same way.
   */
 object Rounds {
 
-  private def pin(df: DataFrame): DataFrame = Materialize.state(df)
-
   /** Runs `step(state, round)` for rounds 1..n, pinning each result. */
   def fixed(n: Int, init: DataFrame)(step: (DataFrame, Int) => DataFrame): DataFrame =
-    (1 to n).foldLeft(init)((state, round) => pin(step(state, round)))
+    (1 to n).foldLeft(init)((state, round) => Materialize.state(step(state, round)))
 
   /** Runs `step` until `done(prev, next)` holds — `next` is already pinned
     * when `done` runs, so a convergence action reads materialized blocks.
@@ -37,7 +34,7 @@ object Rounds {
     @tailrec def go(state: DataFrame, round: Int): Option[DataFrame] =
       if (round == maxIters) None
       else {
-        val next = pin(step(state))
+        val next = Materialize.state(step(state))
         if (done(state, next)) Some(next) else go(next, round + 1)
       }
     go(init, 0)

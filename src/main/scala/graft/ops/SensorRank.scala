@@ -82,7 +82,7 @@ object SensorRank {
     // ONE scan computes the whole per-signal dimension: value envelope, bin
     // width, AND the global 75% time split (a second-level window over
     // ~|signals| rows — min of mins == global min — never a second pass over
-    // the fact table). The dimension is localCheckpoint'ed because TWO
+    // the fact table). The dimension is pinned because TWO
     // consumers reference it (the binning join and the dense grid): without
     // materialization each reference re-expands the scan subtree into the
     // plan, and the fact table would be read once per reference.
@@ -97,7 +97,7 @@ object SensorRank {
           (max(col("emx")).over(wAll) - min(col("emn")).over(wAll)) * 0.75).cast("long"))
       .withColumn("width", (col("vmax") - col("vmin")) / NumBins)
       .select(col("event_type"), col("vmin"), col("width"), col("split_e"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
 
     // Assign each point a phase and a bin, then count per (signal, phase, bin).
     val binned = ev

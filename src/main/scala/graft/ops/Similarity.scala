@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.Tables
 import graft.functions.DecimalDot
 
@@ -23,19 +22,6 @@ import graft.functions.DecimalDot
   * and identical to the DuckDB oracle's decimal sums.
   */
 object Similarity {
-
-  /** Checkpoint CORPUS-SIZED iterative-training state to disk, never heap.
-    * The sf100 rehearsal (BASELINE_sf100.md) pinned the failure mode: PQ
-    * training pins several corpus×d exploded tables as MEMORY_AND_DISK
-    * checkpoint blocks, and at the ≤31 GiB compressed-oops executor
-    * ceiling those blocks starve the very broadcast builds the joins
-    * need ("Not enough memory to build and broadcast" at 8 GiB heap).
-    * Heap is the scarce resource at scale; disk is not — so anything
-    * O(corpus) pins DISK_ONLY and only O(k)/O(d) state (codebooks,
-    * per-dim stats) keeps the default memory level.
-    */
-  private def diskCheckpoint(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, StorageLevel.DISK_ONLY)
 
   /** Hash-spread an exploded dim table across the session's full shuffle
     * width BEFORE pinning it. The test corpora are single-row-group
@@ -101,7 +87,7 @@ object Similarity {
     */
   private def cosineTopKFor(spark: SparkSession, sfDir: String): DataFrame =
     SharedState.getOrBuild(spark, sfDir, "cosineTopK:10:5") {
-      cosineTopK(Tables.embeddings(spark, sfDir)).localCheckpoint()
+      Materialize.state(cosineTopK(Tables.embeddings(spark, sfDir)))
     }
 
   /** Per-label mean vectors — the IVF "codebook", trained in-engine. Each
@@ -160,7 +146,7 @@ object Similarity {
     */
   private def ivfAnnFor(spark: SparkSession, sfDir: String): DataFrame =
     SharedState.getOrBuild(spark, sfDir, "ivfAnn:10:5:2") {
-      ivfAnn(Tables.embeddings(spark, sfDir)).localCheckpoint()
+      Materialize.state(ivfAnn(Tables.embeddings(spark, sfDir)))
     }
 
   /** q43: recall@k of the IVF index against the brute-force ground truth —
@@ -383,7 +369,7 @@ object Similarity {
     */
   private def srpPairsFor(spark: SparkSession, sfDir: String): DataFrame =
     SharedState.getOrBuild(spark, sfDir, "srpLsh:64:4:1:0.4:8") {
-      srpLshAuto(Tables.embeddings(spark, sfDir)).localCheckpoint()
+      Materialize.state(srpLshAuto(Tables.embeddings(spark, sfDir)))
     }
 
   /** q76: semantic prune — SemDeDup-shaped keep-one-per-semantic-cluster
@@ -586,10 +572,10 @@ object Similarity {
     // unsplittable input repartitions right after the read); partition
     // count follows spark.sql.shuffle.partitions, so it scales with the
     // session, not a local constant
-    val dims = diskCheckpoint(
+    val dims = Materialize.state(
       x.select(col("vec_id"), posexplode(col("v")).as(Seq("i", "xd")))
         .withColumn("s", pmod(col("i"), lit(m)))
-        .transform(spread))
+        .transform(spread), onDisk = true)
     val (cent, codes) = pqTrain(dims, kCodes, iters)
     (dims, cent, codes)
   }
@@ -630,13 +616,13 @@ object Similarity {
     // for in-range values, with an exact big-integer fallback), the same
     // decimal(28,12) update means, the same ((vv − 2·dot) + cc) double
     // evaluation order, ties on codeword id — oracle-gated bit parity.
-    val sub = diskCheckpoint(
+    val sub = Materialize.state(
       dims.groupBy(col("vec_id"), col("s"))
         .agg(expr("array_sort(collect_list(struct(i, xd)))").as("ixd"))
         .select(col("vec_id"), col("s"),
           expr("transform(ixd, p -> p.i)").as("idxs"),
           expr("transform(ixd, p -> p.xd)").as("xs"))
-        .withColumn("vv", DecimalDot(col("xs"), col("xs"))))
+        .withColumn("vv", DecimalDot(col("xs"), col("xs"))), onDisk = true)
 
     // (s, cws: [(c, cds, cc)…]) — the whole codebook as one broadcast row
     // per subspace, codewords sorted by id so the argmin tie-break is the
@@ -661,7 +647,6 @@ object Similarity {
       .orderBy(col("vec_id")).limit(kCodes)
     val seeds = dims.join(broadcast(seedIds), "vec_id")
       .select(col("s"), col("vec_id").as("c"), col("i"), col("xd").as("cd"))
-      .localCheckpoint()
     val cent = Rounds.fixed(iters, seeds) { (cent, _) =>
       assign(cbookOf(cent))
         .select(col("s"), col("best.c").as("c"),
@@ -671,9 +656,9 @@ object Similarity {
         .agg((round((sum(col("xd").cast("decimal(28,12)")).cast("double")
           / count(lit(1))) * lit(1e12)) / lit(1e12)).as("cd"))
     }
-    (cent, diskCheckpoint(assign(cbookOf(cent))
+    (cent, Materialize.state(assign(cbookOf(cent))
       .select(col("vec_id"), col("s"), col("best.c").as("c"),
-        col("best.d2").as("d2"))))
+        col("best.d2").as("d2")), onDisk = true))
   }
 
   def pqRecall(emb: DataFrame, m: Int = 4, kCodes: Int = 8, iters: Int = 2,
@@ -825,14 +810,14 @@ object Similarity {
     val all = asDoubles(emb).withColumn("nrm", normCol("v"))
     val centDims = centroids(emb)
       .select(col("label"), posexplode(col("cv")).as(Seq("i", "ccd")))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val dims = all.select(col("vec_id"), col("label"),
       posexplode(col("v")).as(Seq("i", "xd")))
-    val rdims = diskCheckpoint(dims.join(centDims, Seq("label", "i"))
+    val rdims = Materialize.state(dims.join(centDims, Seq("label", "i"))
       .select(col("vec_id"), pmod(col("i"), lit(m)).as("s"), col("i"),
         (col("xd") - col("ccd")).as("xd"))
       // spread the unsplittable-scan explode before training (see pqState)
-      .transform(spread))
+      .transform(spread), onDisk = true)
     val (cent, codes) = pqTrain(rdims, kCodes, iters)
 
     // probe → nprobe nearest cells by raw-vector cosine (q26's shortlist),
@@ -949,10 +934,10 @@ object Similarity {
 
     val c0 = base.orderBy(col("vec_id")).limit(1)
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("vv").as("cvv"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     var md = withD2(base, c0)
       .select(col("vec_id"), col("v"), col("vv"), col("nd2").as("d2"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     var out = c0.select(col("cid")).withColumn("k", lit(0))
       .withColumn("radius", lit(null).cast("double"))
       .crossJoin(covOf(md))
@@ -960,11 +945,11 @@ object Similarity {
       val sel = md.orderBy(col("d2").desc, col("vec_id")).limit(1)
         .select(col("vec_id").as("cid"), col("d2").as("radius"),
           col("v").as("cv"), col("vv").as("cvv"))
-        .localCheckpoint()
+        .transform(Materialize.state(_))
       md = withD2(md, sel)
         .select(col("vec_id"), col("v"), col("vv"),
           least(col("d2"), col("nd2")).as("d2"))
-        .localCheckpoint()
+        .transform(Materialize.state(_))
       out = out.unionByName(
         sel.select(col("cid"), col("radius")).withColumn("k", lit(r))
           .crossJoin(covOf(md)))
@@ -1001,9 +986,9 @@ object Similarity {
   def balancedPq(emb: DataFrame, m: Int = 4, kCodes: Int = 8,
                  iters: Int = 2): DataFrame = {
     // spread the unsplittable-scan explode before training (see pqState)
-    val dims0 = diskCheckpoint(asDoubles(emb)
+    val dims0 = Materialize.state(asDoubles(emb)
       .select(col("vec_id"), posexplode(col("v")).as(Seq("i", "xd")))
-      .transform(spread))
+      .transform(spread), onDisk = true)
     val idims = dims0.withColumn("s", pmod(col("i"), lit(m)))
       .select(col("vec_id"), col("s"), col("i"), col("xd"))
     val (_, icodes) = pqTrain(idims, kCodes, iters)
@@ -1027,14 +1012,14 @@ object Similarity {
       .groupBy(col("i"))
       .agg((sum((col("cd0") * col("cd0")).cast("decimal(28,16)"))
         .cast("double") / count(lit(1))).as("dvar"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val wv = Window.orderBy(col("dvar").desc, col("i"))
     val alloc = dvar
       .withColumn("cyc", pmod(row_number().over(wv) - 1, lit(2 * m)))
       .withColumn("s", when(col("cyc") < m, col("cyc"))
         .otherwise(lit(2 * m - 1) - col("cyc")))
       .select(col("i"), col("s"), col("dvar"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val ivar = dvar.withColumn("s", pmod(col("i"), lit(m)))
 
     // cheap single-join / pure-projection views of the disk-checkpointed
@@ -1377,14 +1362,14 @@ object Similarity {
       .select(col("vec_id"), col("v"), col("nrm"), col("rel"))
       .orderBy(col("rel").desc, col("vec_id"))
       .limit(pool)
-      .localCheckpoint() // pool rows — tiny from here on
+      .transform(Materialize.state(_)) // pool rows — tiny from here on
     val sims = rel.select(col("vec_id").as("a"), col("v").as("va"),
         col("nrm").as("na"))
       .join(broadcast(rel.select(col("vec_id").as("b"), col("v").as("vb"),
         col("nrm").as("nb"))), col("a") =!= col("b"))
       .select(col("a"), col("b"),
         round(dotExpr("va", "vb") / (col("na") * col("nb")), 9).as("sim"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val none = rel.limit(0)
       .select(col("vec_id"), lit(0.0).as("score"), lit(0).as("rnk"))
     Rounds.fixed(k, none) { (selected, step) =>
@@ -1509,13 +1494,13 @@ object Similarity {
     val muArr = mu
       .agg(expr("transform(array_sort(collect_list(struct(i, mu))), p -> p.mu)")
         .as("marr"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val xc = x0.crossJoin(broadcast(muArr))
       // spread the unsplittable scan before the power rounds (see pqState)
       .transform(spread)
       .select(col("vec_id"),
         expr("zip_with(v, marr, (x, m) -> x - m)").as("xv"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     (xc, powerRounds(xc, muArr, iters))
   }
 
@@ -1595,7 +1580,6 @@ object Similarity {
       .withColumn("a", DecimalDot(col("xv"), col("varr")))
       .select(col("vec_id"),
         expr("zip_with(xv, varr, (x, vi) -> x - a / uu * vi)").as("xv"))
-      .localCheckpoint()
     abttFrom(xc, xp, nProbes, k)
   }
 
@@ -1997,7 +1981,7 @@ object Similarity {
     val sub = x.select(col("vec_id"), col("v"))
       .transform(spread)
       .withColumn("vv", DecimalDot(col("v"), col("v")))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
 
     def cbookOf(cent: DataFrame): DataFrame =
       cent.groupBy(col("c"))
@@ -2017,7 +2001,6 @@ object Similarity {
     val seedIds = x.select(col("vec_id")).orderBy(col("vec_id")).limit(k)
     val seeds = x.join(broadcast(seedIds), "vec_id")
       .select(col("vec_id").as("c"), posexplode(col("v")).as(Seq("i", "cd")))
-      .localCheckpoint()
     val cent = Rounds.fixed(iters, seeds) { (cent, _) =>
       assign(cbookOf(cent))
         .select(col("best.c").as("c"), posexplode(col("v")).as(Seq("i", "xd")))
@@ -2347,7 +2330,7 @@ object Similarity {
       .withColumn("a", DecimalDot(col("xv"), col("varr")))
       .select(col("vec_id"), col("a"),
         expr("zip_with(xv, varr, (x, vi) -> x - a / uu * vi)").as("xv"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val a1 = axp.select(col("vec_id"), col("a"))
     val xp = axp.select(col("vec_id"), col("xv"))
     // a residual orthogonal to the start vector freezes PC2 at zero, so
@@ -2540,7 +2523,7 @@ object Similarity {
       .crossJoin(broadcast(probes))
       .select(col("probe_id"), col("cand"),
         round(dotExpr("pv", "cv") / (col("pn") * col("cn")), 6).as("cos"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val wP = Window.partitionBy(col("probe_id"))
       .orderBy(col("cos").desc, col("cand"))
     val truth = pc.where(col("cand") =!= col("probe_id"))
@@ -2558,7 +2541,7 @@ object Similarity {
     val adj = sym.withColumn("rn", row_number().over(
         Window.partitionBy(col("v")).orderBy(col("cosine").desc, col("o"))))
       .where(col("rn") <= degree).select(col("v"), col("o"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val entries = adj.groupBy(col("v")).agg(count(lit(1)).as("deg"))
       .orderBy(col("deg").desc, col("v")).limit(nEntries)
       .select(col("v").as("cand"))
@@ -2739,7 +2722,7 @@ object Similarity {
                           beam: Int): DataFrame =
     SharedState.getOrBuild(spark, sfDir, s"graphAnnWalk:10:5:8:4:$beam:3") {
       val (pc, truth, adj, entries) = graphAnnStateFor(spark, sfDir, 10, 5, 8, 4)
-      beamWalk(pc, truth, adj, entries, 5, beam, 3).localCheckpoint()
+      Materialize.state(beamWalk(pc, truth, adj, entries, 5, beam, 3))
     }
 
   def graphAnnBeamSweep(spark: SparkSession, sfDir: String): DataFrame = {

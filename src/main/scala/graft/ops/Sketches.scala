@@ -202,7 +202,7 @@ object Sketches {
         (expr("CAST(substr(source, 4, 10) AS INT) % 2") === 0)
           .as("even")), "doc_id")
       .select(col("even"), col("sh")).distinct()
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val exact = sided.groupBy(col("sh"))
       .agg(max(when(col("even"), 1L).otherwise(0L)).as("in_a"),
         max(when(!col("even"), 1L).otherwise(0L)).as("in_b"))

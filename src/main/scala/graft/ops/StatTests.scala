@@ -700,7 +700,7 @@ object StatTests {
           .when(col("value") <= col("b3"), 2).otherwise(3))
       .groupBy(col("event_type"), col("bkt"))
       .agg(count(lit(1)).as("nij"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val rows = cells.groupBy(col("event_type")).agg(sum(col("nij")).as("ni"))
     val cols_ = cells.groupBy(col("bkt")).agg(sum(col("nij")).as("nj"))
     val tot = cells.agg(sum(col("nij")).as("n"))

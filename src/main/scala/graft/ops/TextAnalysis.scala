@@ -139,7 +139,7 @@ object TextAnalysis {
         .transform(d => d.repartition(
           d.sparkSession.sessionState.conf.numShufflePartitions,
           col("doc_id")))
-        .localCheckpoint()
+        .transform(Materialize.state(_))
     }
 
   def heavyHitters(docs: DataFrame, topN: Int = 5): DataFrame =
@@ -690,7 +690,7 @@ object TextAnalysis {
     val sized = docs.select(col("source"),
       (length(bin(col("n_chars"))) - 1).cast("int").as("bucket"))
     val counts = sized.groupBy(col("source"), col("bucket"))
-      .agg(count(lit(1)).as("c")).localCheckpoint()
+      .agg(count(lit(1)).as("c"))
     val srcTot = counts.groupBy(col("source")).agg(sum(col("c")).as("t"))
     val bucketTot = counts.groupBy(col("bucket")).agg(sum(col("c")).as("bc"))
     val nb = counts.select(col("bucket")).distinct()
@@ -1017,8 +1017,8 @@ object TextAnalysis {
     */
   private def nbScoresFor(spark: SparkSession, sfDir: String): DataFrame =
     SharedState.getOrBuild(spark, sfDir, "nbScores") {
-      nbScoresFromToks(Tables.documents(spark, sfDir),
-        toksFor(spark, sfDir)).localCheckpoint()
+      Materialize.state(nbScoresFromToks(Tables.documents(spark, sfDir),
+        toksFor(spark, sfDir)))
     }
 
   def naiveBayesSource(docs: DataFrame): DataFrame =
@@ -1055,7 +1055,7 @@ object TextAnalysis {
     * plus class-sized aggregates; thresholds are a |classes|-row broadcast.
     */
   def confidentErrors(docs: DataFrame): DataFrame =
-    confidentErrorsFrom(docs, nbScores(docs).localCheckpoint())
+    confidentErrorsFrom(docs, Materialize.state(nbScores(docs)))
 
   private def confidentErrorsFrom(docs: DataFrame,
                                   scores: DataFrame): DataFrame = {
@@ -1068,7 +1068,6 @@ object TextAnalysis {
     val post = scores.join(lse, "doc_id")
       .select(col("doc_id"), col("source"),
         (round(exp(col("score") - col("lse")) * lit(1e12)) / lit(1e12)).as("p"))
-      .localCheckpoint()
     val actual = docs.select(col("doc_id"), col("source").as("actual"))
     val thr = post.join(actual, "doc_id")
       .where(col("source") === col("actual"))
@@ -1124,7 +1123,6 @@ object TextAnalysis {
         when(col("u24") < cut, lit("train")).otherwise(lit("eval")))
       .select(col("doc_id"), col("side"), col("tok"))
       .where(length(col("tok")) > 0)
-      .localCheckpoint()
     val dt = toks.groupBy(col("doc_id"), col("side"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
     val tc = toks.where(col("side") === "train")
@@ -1200,7 +1198,7 @@ object TextAnalysis {
       .withColumn("side",
         when(col("u24") < cut, lit("train")).otherwise(lit("eval")))
       .select(col("doc_id"), col("source"), col("side"), col("w"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val bigrams = sided.where(size(col("w")) >= 2)
       .select(col("source"), col("side"),
         explode(expr(
@@ -1391,7 +1389,6 @@ object TextAnalysis {
       .withColumn("u24", expr(Sketches.hexValSql("h", 6)))
       .select(col("u24"), col("tok"))
       .where(length(col("tok")) > 0)
-      .localCheckpoint()
     val vocab = toks.select(col("tok")).distinct()
       .agg(count(lit(1)).as("v"))
     val fstructs = array(fracs.map(f => struct(lit(f).as("f"),
@@ -2009,7 +2006,7 @@ object TextAnalysis {
         explode(sequence(lit(1), length(col("word")))).as("pos"))
       .select(col("word"), col("freq"), col("pos"),
         expr("substr(word, pos, 1)").as("sym"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     val wOrd = Window.partitionBy(col("word")).orderBy(col("pos"))
 
     def fertOf(s: DataFrame): DataFrame =
@@ -2027,7 +2024,7 @@ object TextAnalysis {
         .groupBy(col("sym"), col("nxt")).agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("sym"), col("nxt")).limit(1)
         .select(col("sym").as("l"), col("nxt").as("r"), col("cnt"))
-        .localCheckpoint()
+        .transform(Materialize.state(_))
       st = st.withColumn("nxt", lead(col("sym"), 1).over(wOrd))
         .crossJoin(broadcast(best))
         .withColumn("start",
@@ -2039,7 +2036,7 @@ object TextAnalysis {
         .select(col("word"), col("freq"), col("pos"),
           when(col("start"), concat(col("l"), col("r")))
             .otherwise(col("sym")).as("sym"))
-        .localCheckpoint()
+        .transform(Materialize.state(_))
       out = out.unionByName(
         best.crossJoin(fertOf(st)).select(lit(r).as("rnd"),
           col("l").as("lsym"), col("r").as("rsym"),

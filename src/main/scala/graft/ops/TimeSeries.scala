@@ -1127,7 +1127,7 @@ object TimeSeries {
     val seq0 = events
       .select(col("event_type"), col("ts"), col("event_id"), col("value"))
       .withColumn("rn", (row_number().over(wOrd) - 1).cast("bigint"))
-      .localCheckpoint() // three per-size passes reuse the numbered series
+      .transform(Materialize.state(_)) // three per-size passes reuse the numbered series
     val perSize = sizes.map { s =>
       val df = seq0.withColumn("win", expr(s"rn div $s"))
       val stats = df.groupBy(col("event_type"), col("win"))
@@ -2754,21 +2754,21 @@ object TimeSeries {
     var resid = ev.groupBy(col("event_type"), col("dow"), col("hr"))
       .agg((sum(col("value").cast("decimal(18,6)")).cast("double")
         / count(lit(1))).as("r"))
-      .localCheckpoint()
+      .transform(Materialize.state(_))
     var rowEff: DataFrame = null
     var colEff: DataFrame = null
     for (_ <- 1 to iters) {
       val rm = boundedMedian(resid, Seq("event_type", "dow"), "r", "rm")
       resid = resid.join(rm, Seq("event_type", "dow"))
         .withColumn("r", col("r") - col("rm")).drop("rm")
-        .localCheckpoint()
+        .transform(Materialize.state(_))
       rowEff = if (rowEff == null) rm.withColumnRenamed("rm", "re")
         else rowEff.join(rm, Seq("event_type", "dow"))
           .withColumn("re", col("re") + col("rm")).drop("rm")
       val cm = boundedMedian(resid, Seq("event_type", "hr"), "r", "cm")
       resid = resid.join(cm, Seq("event_type", "hr"))
         .withColumn("r", col("r") - col("cm")).drop("cm")
-        .localCheckpoint()
+        .transform(Materialize.state(_))
       colEff = if (colEff == null) cm.withColumnRenamed("cm", "ce")
         else colEff.join(cm, Seq("event_type", "hr"))
           .withColumn("ce", col("ce") + col("cm")).drop("cm")

@@ -1,10 +1,15 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkEnv
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, classic}
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.catalyst.plans.physical.Partitioning
-import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSeq, SortOrder}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
+import org.apache.spark.sql.connector.read.streaming.SparkDataStream
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.storage.RDDBlockId
 
@@ -57,4 +62,24 @@ object PinnedRelation {
       lr.copy(outputPartitioning = partitioning)(
         session, Some(Statistics(sizeInBytes)), Some(lr.constraints)))
   }
+}
+
+/** Plans pins that keep a hash partitioning as [[PinnedScanExec]]s. */
+object PinnedScan extends SparkStrategy {
+  def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case LogicalRDD(out, rdd, h: HashPartitioning, ordering, false, _) =>
+      new PinnedScanExec(out, rdd, "ExistingRDD", h, ordering, None) :: Nil
+    case _ => Nil
+  }
+}
+
+/** Spark's checkpoint scan, canonicalized with its partitioning normalized
+  * too: Spark keeps a leaf partitioning's attribute ids, so the two sides of
+  * a self-join on one pin canonicalize apart and share no exchange. */
+class PinnedScanExec(out: Seq[Attribute], rdd: RDD[InternalRow], name: String,
+                     partitioning: HashPartitioning, ordering: Seq[SortOrder],
+                     stream: Option[SparkDataStream])
+    extends RDDScanExec(out, rdd, name, partitioning, ordering, stream) {
+  override def doCanonicalize(): SparkPlan = super.doCanonicalize().asInstanceOf[RDDScanExec]
+    .copy(outputPartitioning = QueryPlan.normalizeExpressions(partitioning, AttributeSeq(out)))
 }

@@ -7,11 +7,12 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{Listeners, PinnedRelation}
-import org.apache.spark.storage.RDDBlockId
+import org.apache.spark.storage.{BlockStatus, RDDBlockId}
+import scala.jdk.CollectionConverters._
 
 class MaterializeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -27,13 +28,17 @@ class MaterializeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def sumByKey(df: DataFrame): DataFrame = df.groupBy("k").agg(sum("x").as("s"))
 
-  /** Bytes the local block manager stores for the pin's blocks. */
-  private def pinnedBytes(pinned: DataFrame): Long = {
+  /** The local block manager's status of each of the pin's blocks. */
+  private def blocks(pinned: DataFrame): Seq[BlockStatus] = {
     val rdd = PinnedRelation.relation(pinned).rdd
     rdd.partitions.indices.flatMap { i =>
       SparkEnv.get.blockManager.getStatus(RDDBlockId(rdd.id, i))
-    }.map(s => s.memSize + s.diskSize).sum
+    }
   }
+
+  /** Bytes the local block manager stores for the pin's blocks. */
+  private def pinnedBytes(pinned: DataFrame): Long =
+    blocks(pinned).map(s => s.memSize + s.diskSize).sum
 
   private def jobsOf(body: => Unit): Int = {
     val n = new java.util.concurrent.atomic.AtomicInteger
@@ -112,5 +117,53 @@ class MaterializeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val bare = (0L until 400L).map(i => (i % 37, i)).toDF("k", "x").repartition($"k")
       assert(rows(Materialize.state(bare)) === rows(bare))
     }
+  }
+
+  test("two references of a kept-partitioning pin share their exchanges") {
+    // a self-join re-instances one side; its partitioning must still
+    // canonicalize like the other side's, or AQE reuses no exchange
+    def twice(p: DataFrame): DataFrame = {
+      val rare = p.groupBy("x").agg(count(lit(1)).as("c")).where($"c" <= 1)
+      p.join(rare, "x").select("k").union(p.join(rare.select("x"), "x").select("k"))
+    }
+    def reused(df: DataFrame): Int = {
+      df.collect() // AQE reuses exchanges while it runs the plan
+      collect(df.queryExecution.executedPlan) { case r: ReusedExchangeExec => r }.size
+    }
+    val pinned = Materialize.state(keyed(6))
+    assert(PinnedRelation.relation(pinned).outputPartitioning.isInstanceOf[HashPartitioning])
+    assert(reused(twice(pinned)) >= 1)
+    assert(reused(twice(pinned)) === reused(twice(keyed(6).localCheckpoint())))
+    assert(rows(twice(pinned)) === rows(twice(keyed(6))))
+  }
+
+  test("an onDisk pin holds every block on disk and declares those bytes") {
+    val pinned = Materialize.state(keyed(6), onDisk = true)
+    val held = blocks(pinned)
+    assert(held.size === 6)
+    held.foreach { b =>
+      assert(b.memSize === 0L)
+      assert(b.diskSize > 0L)
+    }
+    assert(PinnedRelation.relation(pinned).stats.sizeInBytes === held.map(_.diskSize).sum)
+    assert(rows(sumByKey(pinned)) === rows(sumByKey(keyed(6))))
+  }
+
+  test("Materialize is the only pin in the main sources") {
+    // the plain-pin path stays deleted: PinnedRelation only names it in docs
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no sources under $root")
+    val allowed = Set("Materialize.scala", "PinnedRelation.scala")
+    val stream = java.nio.file.Files.walk(root)
+    val offenders = try {
+      stream.iterator().asScala.toSeq
+        .filter(p => p.toString.endsWith(".scala") && !allowed(p.getFileName.toString))
+        .flatMap { p =>
+          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (line, i) if line.contains("localCheckpoint(") => s"$p:${i + 1}"
+          }
+        }
+    } finally stream.close()
+    assert(offenders.isEmpty, s"plain pins outside Materialize: ${offenders.mkString(", ")}")
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FormattedMode, LogicalRDD}
+import org.apache.spark.sql.graft.PinnedRelation
 
 /** Plan-audit regression gate: the invariants a human would check by reading
   * the Explain dump, promoted to assertions so a future change that degrades
@@ -15,13 +17,29 @@ class PlanAuditSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  private lazy val frames: Map[String, DataFrame] =
+    SparkEntry.queries.map { case (name, fn) => name -> fn(spark, sfDir) }
+
   private lazy val plans: Map[String, String] =
-    SparkEntry.queries.map { case (name, fn) =>
-      name -> fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+    frames.map { case (name, df) =>
+      name -> df.queryExecution.explainString(FormattedMode)
     }
 
   test("every query plan builds") {
     assert(plans.size === SparkEntry.queries.size)
+  }
+
+  test("every pin declares at most 4x the bytes its blocks hold") {
+    // an estimate — say the product of a join's sides — plans a shuffle
+    // join against a pin AQE would broadcast once it has run a stage
+    val pins = frames.toSeq.sortBy(_._1).flatMap { case (name, df) =>
+      df.queryExecution.analyzed.collectWithSubqueries { case lr: LogicalRDD => lr }
+        .flatMap(lr => PinnedRelation.storedBytes(lr).map((name, lr.stats.sizeInBytes, _)))
+    }
+    assert(pins.nonEmpty, "no query reads a pin with stored blocks")
+    val oversized = pins.collect { case (name, declared, stored) if declared > 4 * stored =>
+      s"$name declares $declared bytes, holds $stored" }
+    if (oversized.nonEmpty) fail(oversized.distinct.mkString("; "))
   }
 
   test("no unintentional cartesian product anywhere") {

@@ -10,6 +10,11 @@ query where the change's minimum rose above the parent's. Jobs and stages
 repeat run to run where wall time drifts, so a rise is a plan regression
 even when the timings hide it.
 
+Each flagged query is printed with both sides' per-pass lists, and marked
+"parent spread" when the parent's own passes disagree on a counter: such a
+rise may be the parent's run-to-run variation (AQE re-planning on runtime
+statistics) rather than a plan change.
+
 Exit status: 0 when no counter rose, 1 when any did, 2 on unusable input.
 """
 import json
@@ -18,7 +23,8 @@ import sys
 COUNTERS = ("jobs", "stages")
 
 
-def minima(path):
+def passes(path):
+    """Per query, each counter's per-pass list."""
     with open(path) as f:
         queries = json.load(f)["queries"]
     out = {}
@@ -28,22 +34,33 @@ def minima(path):
             raise ValueError(f"{path}: {name} has no per-pass "
                              f"{', '.join(missing)}; was it written by a "
                              "graft.Bench that records counters?")
-        out[name] = {c: min(entry[c]) for c in COUNTERS}
+        out[name] = {c: list(entry[c]) for c in COUNTERS}
     return out
+
+
+def totals(side, names, counter):
+    """Sum of one counter over `names`, per pass."""
+    width = min((len(side[n][counter]) for n in names), default=0)
+    return [sum(side[n][counter][i] for n in names) for i in range(width)]
 
 
 def main(argv):
     if len(argv) != 3:
         raise ValueError(__doc__.strip().splitlines()[2])
-    parent, change = minima(argv[1]), minima(argv[2])
+    parent, change = passes(argv[1]), passes(argv[2])
     common = sorted(parent.keys() & change.keys())
     rose = []
     for name in common:
         p, c = parent[name], change[name]
-        if any(c[k] > p[k] for k in COUNTERS):
+        if any(min(c[k]) > min(p[k]) for k in COUNTERS):
             rose.append(name)
+            spread = any(len(set(p[k])) > 1 for k in COUNTERS)
             print(f"{name}: " + ", ".join(
-                f"{k} {p[k]} -> {c[k]}" for k in COUNTERS))
+                f"{k} {min(p[k])} -> {min(c[k])} ({p[k]} -> {c[k]})"
+                for k in COUNTERS) + ("  [parent spread]" if spread else ""))
+    for k in COUNTERS:
+        print(f"{k} per pass over compared queries: "
+              f"{totals(parent, common, k)} -> {totals(change, common, k)}")
     only = sorted(parent.keys() ^ change.keys())
     if only:
         print(f"not compared (in one file only): {', '.join(only)}")
